@@ -35,4 +35,4 @@ def oracle_sql() -> dict[str, str]:
     """Equivalent DuckDB SQL for every declared query (views pre-registered:
     region nation customer supplier part orders lineitem events documents
     embeddings)."""
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items()}

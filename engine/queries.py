@@ -32,21 +32,6 @@ def _cents(col: str):
     return F.round(F.col(col) * 100, 0).cast("long")
 
 
-def _ntz(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize a timestamp column to TIMESTAMP_NTZ whose wall-clock equals
-    the stored (UTC) instant, independent of the session timezone.  Parquet
-    reads yield NTZ when `spark.sql.parquet.inferTimestampNTZ.enabled` is on
-    and LTZ otherwise; for the LTZ case, derive the NTZ value timezone-free
-    from the instant's epoch microseconds (`unix_micros` does not consult the
-    session timezone, unlike an implicit LTZ->NTZ cast or `convert_timezone`
-    with an LTZ input, which both use the session zone to pick the wall
-    clock)."""
-    if dict(df.dtypes)[col] == "timestamp":
-        return df.withColumn(col, F.expr(
-            f"timestampadd(MICROSECOND, unix_micros({col}), TIMESTAMP_NTZ'1970-01-01 00:00:00')"))
-    return df
-
-
 def _epoch_us(col: str):
     """BIGINT microseconds since epoch for an NTZ column; timezone-free."""
     return F.expr(f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', {col})")
@@ -62,7 +47,7 @@ def _epoch_s_trunc_hour(col: str):
 @dataclass(frozen=True)
 class Query:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL over pre-registered views, or None
+    oracle: str  # DuckDB SQL over pre-registered views
 
 
 # ---------------------------------------------------------------------------
@@ -72,9 +57,9 @@ class Query:
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 analog: per (returnflag, linestatus) pricing summary."""
-    li = _ntz(load(spark, sf_dir, "lineitem",
-                   ["l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
-                    "l_discount", "l_tax", "l_shipdate"]), "l_shipdate")
+    li = load(spark, sf_dir, "lineitem",
+              ["l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
+               "l_discount", "l_tax", "l_shipdate"])
     li = li.filter(F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp_ntz"))
     li = li.select(
         "l_returnflag", "l_linestatus",
@@ -250,7 +235,7 @@ FROM g
 
 def _events_cents(spark: SparkSession, sf_dir: str, extra: list[str] | None = None) -> DataFrame:
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
-    ev = _ntz(load(spark, sf_dir, "events", cols))
+    ev = load(spark, sf_dir, "events", cols)
     return ev.select(
         "event_id", "ts", "user_id", "event_type",
         _cents("value").alias("value_c"),
@@ -299,7 +284,7 @@ FROM g
 def gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolation-feasibility analog: inter-event gaps per user; gaps above
     the max-interpolation threshold (1h) counted as voids."""
-    ev = _ntz(load(spark, sf_dir, "events", ["event_id", "ts", "user_id"]))
+    ev = load(spark, sf_dir, "events", ["event_id", "ts", "user_id"])
     ev = ev.select("event_id", "user_id", _epoch_us("ts").alias("t_us"))
     w = W.partitionBy("user_id").orderBy(F.col("t_us").asc(), F.col("event_id").asc())
     g = ev.withColumn("gap_us", F.col("t_us") - F.lag("t_us", 1).over(w)).filter(F.col("gap_us").isNotNull())
@@ -334,7 +319,7 @@ GROUP BY user_id
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: 30-minute inactivity gap starts a new session; per-user
     session count / size / duration stats."""
-    ev = _ntz(load(spark, sf_dir, "events", ["event_id", "ts", "user_id"]))
+    ev = load(spark, sf_dir, "events", ["event_id", "ts", "user_id"])
     ev = ev.select("event_id", "user_id", _epoch_us("ts").alias("t_us"))
     w = W.partitionBy("user_id").orderBy(F.col("t_us").asc(), F.col("event_id").asc())
     gap = F.col("t_us") - F.lag("t_us", 1).over(w)

@@ -124,25 +124,6 @@ def test_decimal_sum_double_cast_bit_identity(spark):
         assert row.dec.hex() == row.lng.hex(), f"bit mismatch for {vals}"
 
 
-def test_ntz_derivation_ignores_session_tz(spark):
-    """_ntz on an LTZ column must produce the UTC wall clock even when the
-    session timezone is not UTC (the ADVICE r09 _ntz finding)."""
-    from datetime import datetime
-
-    from engine.queries import _ntz
-
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        df = spark.sql("SELECT timestamp_seconds(1717243200) AS ts")  # 2024-06-01 12:00:00 UTC
-        assert dict(df.dtypes)["ts"] == "timestamp"
-        out = _ntz(df)
-        assert dict(out.dtypes)["ts"] == "timestamp_ntz"
-        assert out.collect()[0].ts == datetime(2024, 6, 1, 12, 0, 0)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-
 def test_fingerprint_hex_roundtrip(texts_df):
     """The r10 binary-digest shuffle key must re-hex to exactly the md5 hex
     string the query used to group on: lower(hex(unhex(h))) == h for md5

@@ -1,0 +1,66 @@
+"""The declared table schemas: equal to what the files hold, free of Spark
+jobs to read, and timezone-free for timestamps."""
+
+import os
+from datetime import datetime
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from engine.tables import TABLES, load, path
+from tests.conftest import SF_ORACLE, SF_SMOKE
+
+SF_DIRS = (SF_SMOKE, SF_ORACLE, os.path.join(os.path.dirname(SF_SMOKE), "sf0.1"))
+
+
+def _jobs_in_group(spark, group, fn):
+    """Runs `fn` under job group `group`; returns the ids of the jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # The status tracker is fed by the listener bus; drain it so a job that
+    # was launched is also counted.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS, ids=lambda d: d.rsplit("/", 1)[-1])
+def test_declared_schema_matches_files(spark, sf_dir):
+    """A column added, dropped or retyped in the data must fail here, not
+    read as NULLs through a stale declaration."""
+    pairs = {t: (load(spark, sf_dir, t).schema, spark.read.parquet(path(sf_dir, t)).schema)
+             for t in TABLES}
+    drift = {t: (d.simpleString(), f.simpleString()) for t, (d, f) in pairs.items() if d != f}
+    assert not drift, f"declared (left) vs file (right) schemas differ: {drift}"
+
+
+def test_load_launches_no_job(spark):
+    sf_dir = SF_SMOKE
+    assert _jobs_in_group(spark, "declared-load",
+                          lambda: [load(spark, sf_dir, t).schema for t in TABLES]) == []
+    # Control: the same tracker does see the job an inferring read launches.
+    assert _jobs_in_group(spark, "inferred-load",
+                          lambda: spark.read.parquet(path(sf_dir, "region")).schema)
+
+
+def test_ntz_read_ignores_session_tz(spark, tmp_path):
+    """A timestamp column annotated as an instant (isAdjustedToUTC=true)
+    reads as the UTC wall clock through the declared timestamp_ntz, even
+    when the session timezone is not UTC."""
+    pq.write_table(pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([1717243200_000000], pa.timestamp("us", tz="UTC")),  # 2024-06-01 12:00 UTC
+    }), path(str(tmp_path), "events"))
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        assert dict(spark.read.parquet(path(str(tmp_path), "events")).dtypes)["ts"] == "timestamp"
+        df = load(spark, str(tmp_path), "events", ["event_id", "ts"])
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        assert df.collect()[0].ts == datetime(2024, 6, 1, 12, 0, 0)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

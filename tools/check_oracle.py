@@ -10,10 +10,11 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -70,11 +71,6 @@ def main() -> int:
         s_schema = [(f.name, TYPE_FAMILY.get(f.dataType.simpleString(), f.dataType.simpleString()))
                     for f in sdf.schema.fields]
         t1 = time.time()
-        if q.oracle is None:
-            print(f"{name:28s} rows={len(s_rows):7d}  (rows-only, no oracle)  {t1-t0:5.1f}s")
-            if len(s_rows) == 0:
-                failures.append((name, "zero rows"))
-            continue
         rel = con.sql(q.oracle)
         d_cols = list(rel.columns)
         d_types = [TYPE_FAMILY.get(str(t).lower(), str(t).lower()) for t in rel.types]

@@ -1,7 +1,7 @@
 """Dump .explain('formatted') for every declared query.
 
 Usage: python tools/dump_plans.py <suffix> [sf_dir] [query ...]
-Writes $PLANS_DIR/<query>_<suffix>.txt (PLANS_DIR defaults to plans/r10)
+Writes $PLANS_DIR/<query>_<suffix>.txt (PLANS_DIR defaults to the repo's plans/)
 """
 
 from __future__ import annotations
@@ -11,7 +11,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from engine.queries import QUERIES  # noqa: E402
 from engine.session import build_session  # noqa: E402
@@ -21,7 +22,7 @@ def main() -> None:
     suffix = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     names = sys.argv[3:] or list(QUERIES)
-    plans_dir = os.environ.get("PLANS_DIR", "plans/r10")
+    plans_dir = os.environ.get("PLANS_DIR", os.path.join(ROOT, "plans"))
     os.makedirs(plans_dir, exist_ok=True)
     spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
                           sf_dir=sf_dir, app_name=f"plans-{suffix}")
