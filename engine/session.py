@@ -65,6 +65,13 @@ def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"
                                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m")))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Compiled-class cache for generated code (static conf, so it must be
+        # set before the session starts).  The 17 batch queries generate ~200
+        # distinct classes at sf0.001 and sf0.1, the two stream operators 30.
+        # At the default of 100 every warm pass evicts and recompiles 150-190
+        # of them with Janino; 1000 holds the whole working set, so a
+        # repeated query compiles its code once per session.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Streaming state store: the default in-memory HDFS-backed provider keeps
     # every in-watermark key on-heap, which is the streaming path's scale

@@ -56,11 +56,12 @@ def stream_dedup(events: DataFrame) -> DataFrame:
     return events.withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
 
 
-def run_to_memory(df: DataFrame, name: str | None = None) -> str:
-    """Drive a streaming DataFrame to completion into a memory sink; returns
-    the queryable table name."""
+def run_to_memory(df: DataFrame, name: str | None = None, mode: str = "append") -> str:
+    """Drive a streaming DataFrame to completion into a memory sink in output
+    mode `mode` ("append", or "complete" for aggregations); returns the
+    queryable table name."""
     name = name or f"s_{uuid.uuid4().hex[:8]}"
-    q = (df.writeStream.outputMode("append")
+    q = (df.writeStream.outputMode(mode)
          .format("memory").queryName(name).start())
     try:
         q.processAllAvailable()
@@ -70,12 +71,5 @@ def run_to_memory(df: DataFrame, name: str | None = None) -> str:
 
 
 def run_aggregation_to_memory(df: DataFrame, name: str | None = None) -> str:
-    """Like run_to_memory but for aggregations (complete mode)."""
-    name = name or f"s_{uuid.uuid4().hex[:8]}"
-    q = (df.writeStream.outputMode("complete")
-         .format("memory").queryName(name).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return name
+    """run_to_memory in complete mode, for aggregations."""
+    return run_to_memory(df, name, mode="complete")

@@ -159,29 +159,6 @@ def test_behavior_code_equivalence(spark):
         assert r.old == r.new, f"behavior label diverged for value_c={r.value_c}"
 
 
-def test_anchor_min_by_equivalence(spark):
-    """min_by(embedding, vec_id) must pick the same anchor vector as the
-    round-8 groupBy(min) + self-join formulation."""
-    data = [
-        (7, [1.0, 2.0], "a"), (3, [0.5, 0.25], "a"), (9, [4.0, 4.0], "a"),
-        (20, [1.0, 0.0], "b"), (11, [0.0, 1.0], "b"),
-        (5, [2.0, 2.0], "c"),
-    ]
-    emb = spark.createDataFrame(data, "vec_id long, embedding array<double>, label string")
-
-    new = emb.groupBy("label").agg(
-        F.min("vec_id").alias("anchor_id"),
-        F.min_by("embedding", "vec_id").alias("anchor_vec"),
-    )
-    old = (emb.groupBy("label").agg(F.min("vec_id").alias("anchor_id"))
-              .join(emb.select(F.col("vec_id").alias("anchor_id"),
-                               F.col("embedding").alias("anchor_vec")), "anchor_id"))
-
-    n_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in new.collect()}
-    o_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in old.collect()}
-    assert n_rows == o_rows
-
-
 def test_anchor_two_step_hash_equivalence(spark):
     """The r10 two-step anchor path (hash-agg min(vec_id) per label, then
     broadcast-fetch the anchor row by vec_id) must return exactly the rows the

@@ -1,6 +1,10 @@
 """Streaming operators: windowed counts and dedup driven to completion on the
 sf0.001 events data; aggregates cross-checked against the batch analog."""
 
+from datetime import datetime, timedelta, timezone
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from engine import streaming
@@ -10,7 +14,7 @@ from tests.conftest import SF_SMOKE
 def test_windowed_counts_matches_batch(spark):
     stream = streaming.read_event_stream(spark, SF_SMOKE)
     agg = streaming.windowed_counts(stream)
-    table = streaming.run_aggregation_to_memory(agg)
+    table = streaming.run_to_memory(agg, mode="complete")
     got = {(r.w_start, r.event_type): (r.n, r.sum_value_c)
            for r in spark.table(table).collect()}
     assert got
@@ -31,6 +35,39 @@ def test_stream_dedup(spark):
     n = spark.table(table).count()
     n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
     assert n == n_batch  # event_ids are unique -> dedup is a no-op pass-through
+
+
+def test_stream_dedup_drops_repeated_keys(spark, tmp_path):
+    """Rows that repeat an (event_id, ts) key are dropped, within a file and
+    across micro-batches; a row that shares only its id or only its ts is
+    kept.  All timestamps lie within 80 s, so no row is behind the 1 hour
+    watermark and every drop is a duplicate."""
+    base = datetime(2024, 6, 1, 12, 0, tzinfo=timezone.utc)
+    unique = [(i, base + timedelta(seconds=i)) for i in range(80)]
+    repeats = unique[:10] + unique[40:43]  # 13 duplicates
+    near = [(5, base + timedelta(seconds=90)), (1000, base + timedelta(seconds=5))]
+    keys = unique + repeats + near
+    # Five files: the stream reads four per micro-batch, so the repeats in
+    # the last file meet their originals' keys in the dedup state.
+    files = [unique[0:20] + unique[40:43], unique[20:40], unique[40:60] + near,
+             unique[60:80], unique[:10]]
+    assert sorted(k for f in files for k in f) == sorted(keys)
+    for n, rows in enumerate(files):
+        pq.write_table(pa.table({
+            "event_id": pa.array([i for i, _ in rows], pa.int64()),
+            "ts": pa.array([t for _, t in rows], pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([n] * len(rows), pa.int64()),
+            "event_type": pa.array(["click"] * len(rows), pa.string()),
+            "value": pa.array([float(n)] * len(rows), pa.float64()),
+            "props": pa.array([None] * len(rows), pa.string()),
+        }), tmp_path / f"events_{n}.parquet")
+
+    stream = streaming.read_event_stream(spark, str(tmp_path))
+    table = streaming.run_to_memory(streaming.stream_dedup(stream))
+    got = [(r.event_id, r.ts) for r in spark.table(table).collect()]
+    assert len(got) == len(keys) - len(repeats)
+    assert len(set(got)) == len(got)
+    assert sorted(i for i, _ in got) == sorted(i for i, _ in unique + near)
 
 
 def test_stream_dedup_rocksdb_statestore(spark):

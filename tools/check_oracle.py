@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 from engine.queries import QUERIES  # noqa: E402
+from engine.session import build_session  # noqa: E402
 from engine.tables import TABLES, path  # noqa: E402
 
 TYPE_FAMILY = {
@@ -51,15 +52,10 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path(sf_dir, t)}'")
 
-    from pyspark.sql import SparkSession
-    spark = (
-        SparkSession.builder.master("local[8]").appName("oracle-check")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    # The benchmark's session, so the parity gate checks the configuration
+    # that is timed.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = build_session(8, sf_dir=sf_dir, app_name="oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     failures = []
