@@ -12,16 +12,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-EVENT_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampType()),  # watermarks require TIMESTAMP (not NTZ)
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
+from engine.tables import SCHEMAS
+
+# The declared events schema with `ts` as TIMESTAMP: watermarks require
+# TIMESTAMP, not the NTZ the batch queries read.
+EVENT_SCHEMA = ", ".join("ts timestamp" if f == "ts timestamp_ntz" else f
+                         for f in SCHEMAS["events"].split(", "))
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Table loading helpers.
 
 Every table has a fixed, declared schema (`SCHEMAS`, one Spark DDL string per
-table), and `load(spark, sf_dir, name, cols)` reads through it.  A parquet
+table), and `load(spark, sf_dir, name)` reads through it.  A parquet
 read without a schema launches one Spark job per load to infer it from the
 file footers; a declared schema makes building a DataFrame job-free.  The
 declaration is the contract, so a new or retyped column means editing
@@ -11,8 +11,9 @@ Timestamps are declared `timestamp_ntz`: every column reads as the stored UTC
 wall clock whatever the session timezone, also from a file whose column is
 annotated as an instant (`isAdjustedToUTC=true`).
 
-Every query loads exactly the columns it needs (column pruning reaches the
-parquet scan).
+`load` returns the whole table: each query's SQL names the columns it reads,
+and the optimizer prunes the parquet scan to them (the scans' `ReadSchema`
+lists only those columns).
 """
 
 from __future__ import annotations
@@ -45,8 +46,5 @@ def path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-def load(spark: SparkSession, sf_dir: str, name: str, cols: list[str] | None = None) -> DataFrame:
-    df = spark.read.schema(SCHEMAS[name]).parquet(path(sf_dir, name))
-    if cols:
-        df = df.select(*cols)
-    return df
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.schema(SCHEMAS[name]).parquet(path(sf_dir, name))

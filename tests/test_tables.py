@@ -59,7 +59,7 @@ def test_ntz_read_ignores_session_tz(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         assert dict(spark.read.parquet(path(str(tmp_path), "events")).dtypes)["ts"] == "timestamp"
-        df = load(spark, str(tmp_path), "events", ["event_id", "ts"])
+        df = load(spark, str(tmp_path), "events").select("event_id", "ts")
         assert dict(df.dtypes)["ts"] == "timestamp_ntz"
         assert df.collect()[0].ts == datetime(2024, 6, 1, 12, 0, 0)
     finally:
