@@ -43,28 +43,15 @@ def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions(cpus, sf_dir)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Scale-dependent sizing stays parameterized (local defaults keep the
-        # bench comparable): post-shuffle partition target (guide 2.2; raise
-        # toward 256m on a cluster) and scan split size (guide 6; raise toward
-        # 512m-1g for large sequential scans to cut map-task count).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # Let AQE rewrite a planned sort-merge join to a shuffled hash join
         # when every post-shuffle partition's build side fits locally (guide
-        # 3.1: removes both sorts).  Default 0 = off; tying it to the advisory
-        # partition size keeps it scale-adaptive (partitions are coalesced
-        # toward that size, so a qualifying build side is ~one partition).
+        # 3.1: removes both sorts).  Default 0 = off; the value is Spark's
+        # default advisory post-shuffle partition size (AQE coalesces
+        # partitions toward it, so a qualifying build side is ~one partition).
         # Inert at local SFs where these joins are broadcast anyway.
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD",
-                               os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m")))
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
         # Compiled-class cache for generated code (static conf, so it must be
         # set before the session starts).  The 17 batch queries generate ~200
         # distinct classes at sf0.001 and sf0.1, the two stream operators 30.

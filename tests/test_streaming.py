@@ -1,6 +1,7 @@
 """Streaming operators: windowed counts and dedup driven to completion on the
 sf0.001 events data; aggregates cross-checked against the batch analog."""
 
+import os
 from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
@@ -68,6 +69,38 @@ def test_stream_dedup_drops_repeated_keys(spark, tmp_path):
     assert len(got) == len(keys) - len(repeats)
     assert len(set(got)) == len(got)
     assert sorted(i for i, _ in got) == sorted(i for i, _ in unique + near)
+
+
+def test_stream_dedup_drops_late_rows(spark, tmp_path):
+    """Rows behind the watermark are dropped, rows within it are kept.  The
+    stream reads four files per micro-batch, and Spark filters a batch's late
+    rows against the watermark of the batch before it, so the ninth file
+    (batch 3) is checked against max ts of batch 1 - 1 hour.  Its rows two
+    hours and more behind the latest ts are late; its rows half an hour
+    behind it are on time."""
+    base = datetime(2024, 6, 1, 12, 0, tzinfo=timezone.utc)
+    on_time = [(i, base + timedelta(minutes=i)) for i in range(80)]
+    latest = on_time[-1][1]
+    late = [(1000 + i, latest - timedelta(hours=2, minutes=i)) for i in range(5)]
+    recent = [(2000 + i, latest - timedelta(minutes=30 + i)) for i in range(5)]
+    files = [on_time[i:i + 10] for i in range(0, 80, 10)] + [late + recent]
+    for n, rows in enumerate(files):
+        f = tmp_path / f"events_{n}.parquet"
+        pq.write_table(pa.table({
+            "event_id": pa.array([i for i, _ in rows], pa.int64()),
+            "ts": pa.array([t for _, t in rows], pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([n] * len(rows), pa.int64()),
+            "event_type": pa.array(["click"] * len(rows), pa.string()),
+            "value": pa.array([float(n)] * len(rows), pa.float64()),
+            "props": pa.array([None] * len(rows), pa.string()),
+        }), f)
+        # The stream takes files oldest first: pin the order to the index.
+        os.utime(f, (base.timestamp() + n, base.timestamp() + n))
+
+    stream = streaming.read_event_stream(spark, str(tmp_path))
+    table = streaming.run_to_memory(streaming.stream_dedup(stream))
+    got = sorted(r.event_id for r in spark.table(table).collect())
+    assert got == sorted(i for i, _ in on_time + recent)
 
 
 def test_stream_dedup_rocksdb_statestore(spark):
