@@ -59,6 +59,24 @@ def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"
         # of them with Janino; 1000 holds the whole working set, so a
         # repeated query compiles its code once per session.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Streaming checkpoints (offset and commit logs, HDFS-backed and
+        # RocksDB state stores) rename through FileSystem.rename instead of
+        # Spark's default FileContext manager.  Without libhadoop, every
+        # FileContext rename runs FileUtil.readLink, which forks `readlink`
+        # for source, destination and both .crc files: 1,664 of the 2,132
+        # processes two warm stream_replay passes started (JFR
+        # jdk.ProcessStart), 192 per sf0.001 dedup drain.  FileSystem.rename
+        # forks nothing; the 468 left are RawLocalFileSystem's `chmod`.
+        # Safe here: the session is always local[N] and run_to_memory
+        # checkpoints to a local temp dir, where File.renameTo is rename(2)
+        # and replaces the target atomically (FileContext's overwrite-rename
+        # deletes the target first); a no-overwrite rename is
+        # check-then-rename under both managers, and Spark's checksum files
+        # are the same.  A checkpoint on HDFS or an object store should keep
+        # Spark's FileContext default; the engine writes none.
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     # Streaming state store: the default in-memory HDFS-backed provider keeps
     # every in-watermark key on-heap, which is the streaming path's scale

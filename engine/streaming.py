@@ -4,6 +4,8 @@ The parquet directory is treated as a file-source stream (for local smoke a
 memory sink + processAllAvailable drives the batch to completion, per the
 public Structured Streaming guide).  The same exact-integer discipline as the
 batch queries applies so streamed aggregates agree with their batch analogs.
+Checkpoints are written through the FileSystem checkpoint manager that
+engine.session.build_session selects (spark.sql.streaming.checkpointFileManagerClass).
 """
 
 from __future__ import annotations

@@ -2,6 +2,7 @@
 sf0.001 events data; aggregates cross-checked against the batch analog."""
 
 import os
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
@@ -10,6 +11,19 @@ from pyspark.sql import functions as F
 
 from engine import streaming
 from tests.conftest import SF_SMOKE
+
+
+def _write_events(path, keys, n):
+    """One events file with the given (event_id, ts) keys; the other columns
+    carry the file number n."""
+    pq.write_table(pa.table({
+        "event_id": pa.array([i for i, _ in keys], pa.int64()),
+        "ts": pa.array([t for _, t in keys], pa.timestamp("us", tz="UTC")),
+        "user_id": pa.array([n] * len(keys), pa.int64()),
+        "event_type": pa.array(["click"] * len(keys), pa.string()),
+        "value": pa.array([float(n)] * len(keys), pa.float64()),
+        "props": pa.array([None] * len(keys), pa.string()),
+    }), path)
 
 
 def test_windowed_counts_matches_batch(spark):
@@ -54,14 +68,7 @@ def test_stream_dedup_drops_repeated_keys(spark, tmp_path):
              unique[60:80], unique[:10]]
     assert sorted(k for f in files for k in f) == sorted(keys)
     for n, rows in enumerate(files):
-        pq.write_table(pa.table({
-            "event_id": pa.array([i for i, _ in rows], pa.int64()),
-            "ts": pa.array([t for _, t in rows], pa.timestamp("us", tz="UTC")),
-            "user_id": pa.array([n] * len(rows), pa.int64()),
-            "event_type": pa.array(["click"] * len(rows), pa.string()),
-            "value": pa.array([float(n)] * len(rows), pa.float64()),
-            "props": pa.array([None] * len(rows), pa.string()),
-        }), tmp_path / f"events_{n}.parquet")
+        _write_events(tmp_path / f"events_{n}.parquet", rows, n)
 
     stream = streaming.read_event_stream(spark, str(tmp_path))
     table = streaming.run_to_memory(streaming.stream_dedup(stream))
@@ -86,14 +93,7 @@ def test_stream_dedup_drops_late_rows(spark, tmp_path):
     files = [on_time[i:i + 10] for i in range(0, 80, 10)] + [late + recent]
     for n, rows in enumerate(files):
         f = tmp_path / f"events_{n}.parquet"
-        pq.write_table(pa.table({
-            "event_id": pa.array([i for i, _ in rows], pa.int64()),
-            "ts": pa.array([t for _, t in rows], pa.timestamp("us", tz="UTC")),
-            "user_id": pa.array([n] * len(rows), pa.int64()),
-            "event_type": pa.array(["click"] * len(rows), pa.string()),
-            "value": pa.array([float(n)] * len(rows), pa.float64()),
-            "props": pa.array([None] * len(rows), pa.string()),
-        }), f)
+        _write_events(f, rows, n)
         # The stream takes files oldest first: pin the order to the index.
         os.utime(f, (base.timestamp() + n, base.timestamp() + n))
 
@@ -105,20 +105,86 @@ def test_stream_dedup_drops_late_rows(spark, tmp_path):
 
 def test_stream_dedup_rocksdb_statestore(spark):
     """The production state-store config (r10): stream_dedup must produce the
-    same result with the RocksDB provider that SPARK_GRAFT_STATESTORE=rocksdb
-    selects in engine.session."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    old = spark.conf.get(key, None)
+    same result with the RocksDB provider and changelog checkpointing that
+    SPARK_GRAFT_STATESTORE=rocksdb selects in engine.session.  Changelog
+    uploads go through the session's checkpoint file manager."""
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    old = {key: spark.conf.get(key, None) for key in confs}
     try:
-        spark.conf.set(key, provider)
+        for key, value in confs.items():
+            spark.conf.set(key, value)
         stream = streaming.read_event_stream(spark, SF_SMOKE)
         table = streaming.run_to_memory(streaming.stream_dedup(stream))
         n = spark.table(table).count()
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
     n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
     assert n == n_batch
+
+
+def test_stream_checkpoint_forks_no_readlink(spark, tmp_path):
+    """A stream_dedup drain spawns no `readlink` process.  Spark's default
+    FileContext checkpoint manager forks `readlink` four times per rename on
+    a host without libhadoop; engine.session selects the FileSystem manager,
+    which renames in-process.  Counted with a JFR jdk.ProcessStart recording
+    in the session's JVM."""
+    jvm = spark._jvm
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        stream = streaming.read_event_stream(spark, SF_SMOKE)
+        streaming.run_to_memory(streaming.stream_dedup(stream))
+    finally:
+        recording.stop()
+    # java.nio.file.Paths.get is varargs, which py4j cannot call.
+    path = jvm.java.io.File(str(tmp_path / "spawns.jfr")).toPath()
+    recording.dump(path)
+    recording.close()
+    spawned = Counter(str(e.getString("command")).split()[0]
+                      for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path))
+    assert spawned["readlink"] == 0, dict(spawned)
+
+
+def test_stream_dedup_restarts_from_checkpoint(spark, tmp_path):
+    """A stream_dedup query restarted from its checkpoint reads back the
+    offset log, the commit log and the dedup state: a file added between the
+    runs is the only new input, and its rows that repeat an earlier
+    (event_id, ts) key are dropped.  All timestamps lie within 80 s, so no
+    row is late."""
+    base = datetime(2024, 6, 1, 12, 0, tzinfo=timezone.utc)
+    first = [(i, base + timedelta(seconds=i)) for i in range(30)]
+    new = [(100 + i, base + timedelta(seconds=50 + i)) for i in range(10)]
+    src, ck = tmp_path / "events", tmp_path / "ck"
+    src.mkdir()
+    for n in range(3):
+        _write_events(src / f"events_{n}.parquet", first[10 * n:10 * n + 10], n)
+
+    # A memory sink cannot restart from a checkpoint in append mode, so the
+    # query writes to a parquet sink, whose own log keeps it exactly once.
+    out = tmp_path / "out"
+
+    def drain():
+        q = (streaming.stream_dedup(streaming.read_event_stream(spark, str(src)))
+             .writeStream.outputMode("append").format("parquet")
+             .option("path", str(out)).option("checkpointLocation", str(ck)).start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sorted(r.event_id for r in spark.read.parquet(str(out)).collect())
+
+    assert drain() == [i for i, _ in first]
+    _write_events(src / "events_3.parquet", first[::3] + new, 3)
+    # The restart adds the new keys and nothing else.
+    assert drain() == [i for i, _ in first + new]
+    state = set(os.listdir(ck / "state" / "0" / "0"))
+    assert {"1.delta", "1.delta.crc", ".1.delta.crc"} <= state, sorted(state)

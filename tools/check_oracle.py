@@ -15,6 +15,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
+from pyspark.logger import PySparkLogger  # noqa: E402
 
 from engine.oracle import compare, views  # noqa: E402
 from engine.queries import QUERIES  # noqa: E402
@@ -32,7 +33,10 @@ def main() -> int:
     # that is timed.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = build_session(8, sf_dir=sf_dir, app_name="oracle-check")
-    spark.sparkContext.setLogLevel("ERROR")
+    # A query that raises is reported on its FAIL line; keep Spark's executor
+    # stack trace and PySpark's JSON error record off stderr.
+    spark.sparkContext.setLogLevel("FATAL")
+    PySparkLogger.getLogger("SQLQueryContextLogger").disabled = True
 
     failures = 0
     for name in names:
