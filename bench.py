@@ -12,12 +12,9 @@ The warmup is the r09 protocol (untimed pricing_summary) -- two neutral
 synthetic replacements were measured and rejected this round; see the
 comment at the warmup below and OPTIMIZATION_r10.md.
 
-Scale-dependent settings are parameterized via env (local defaults keep the
-driver's bench comparable):
-  SPARK_GRAFT_SHUFFLE_PARTITIONS  default: max(cpus, min(4*cpus,
-                                  input_bytes // 256MB)) -- see
-                                  engine/session.py shuffle_partitions()
-  SPARK_GRAFT_DRIVER_MEM          default 64g (local mode = driver only)
+Shuffle partitions derive from the core count and the input size
+(engine/session.py shuffle_partitions()).  The driver heap is
+$SPARK_GRAFT_DRIVER_MEM, default 64g (local mode = driver only).
 """
 
 from __future__ import annotations

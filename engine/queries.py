@@ -440,7 +440,8 @@ FROM g
 # 4-byte DATE and format only the output rows (guide 2.3).  One scan + one
 # aggregation; the per-(user, day) totals come from window aggregates over the
 # already-established clustering instead of a second aggregation joined back
-# (guide 2.4: share the exchange, avoid the join).
+# (guide 2.4: share the exchange, avoid the join).  A NULL user_id is one
+# group here and in the oracle (its totals join IS NOT DISTINCT FROM).
 DOMINANT_BEHAVIOR = _EVENTS_C + """, g AS (
   SELECT user_id, day_d, event_type, sum(value_c) AS sum_c, count(1) AS n
   FROM (SELECT to_date(ts) AS day_d, user_id, event_type, value_c FROM ev)
@@ -481,7 +482,7 @@ WITH c AS (
 SELECT r.user_id, r.day, r.event_type AS dominant_type, t.n_types,
        CAST(r.sum_c AS DOUBLE) / 100.0 AS dominant_value,
        CAST(t.tot_c AS DOUBLE) / 100.0 AS total_value
-FROM ranked r JOIN tot t ON r.user_id = t.user_id AND r.day = t.day
+FROM ranked r JOIN tot t ON r.user_id IS NOT DISTINCT FROM t.user_id AND r.day = t.day
 WHERE r.rn = 1
 """
 
@@ -557,10 +558,11 @@ _TYPE_STATS_ORACLE = """
 """
 
 
-# Feature normalization analog: per-event z-score against per-type stats.
+# Feature normalization analog: per-event z-score against per-type stats;
+# sigma = 0 gives a NULL z, as DuckDB's x / 0.0 does, not ANSI's DIVIDE_BY_ZERO.
 ZSCORE = _EVENTS_C + _TYPE_STATS + """
 SELECT /*+ BROADCAST(s) */ event_id, event_type,
-       (CAST(value_c AS DOUBLE) / 100.0D - mu) / sigma AS z
+       (CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D) AS z
 FROM ev JOIN (SELECT event_type, mu, sigma FROM stats) s USING (event_type)
 """
 
@@ -576,10 +578,10 @@ FROM c JOIN stats s ON c.event_type = s.event_type
 
 
 # Anomaly-score analog: per user, rate of events with |z| > 2.5 and the worst
-# deviation.
+# deviation (sigma = 0 gives a NULL |z|, as in ZSCORE).
 ANOMALY_USERS = _EVENTS_C + _TYPE_STATS + """, z AS (
   SELECT /*+ BROADCAST(s) */ user_id,
-         abs((CAST(value_c AS DOUBLE) / 100.0D - mu) / sigma) AS abs_z
+         abs((CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D)) AS abs_z
   FROM ev JOIN (SELECT event_type, mu, sigma FROM stats) s USING (event_type)
 ), agg AS (
   SELECT user_id, count(1) AS n,
@@ -611,12 +613,13 @@ FROM z GROUP BY user_id
 
 
 # Reliability-diagram analog: decile bins of value relative to the per-type
-# max; per (type, bin) count and mean.
+# max; per (type, bin) count and mean.  max = 0 divides by NULL (DuckDB's x / 0.0),
+# so least(NULL, 9) = bin 9; nullif of the cast would plan one more Project.
 RELIABILITY_BINS = _EVENTS_C + """, mx AS (
   SELECT event_type, max(value_c) AS max_c FROM ev GROUP BY event_type
 ), binned AS (
   SELECT /*+ BROADCAST(mx) */ event_type,
-         CAST(least(floor(CAST(value_c AS DOUBLE) * 10.0D / CAST(max_c AS DOUBLE)), 9)
+         CAST(least(floor(CAST(value_c AS DOUBLE) * 10.0D / CAST(nullif(max_c, 0) AS DOUBLE)), 9)
               AS BIGINT) AS bin,
          value_c
   FROM ev JOIN mx USING (event_type)

@@ -1,8 +1,11 @@
 """SparkSession construction for bench/tests.
 
-Scale-adaptive, parameterized via env with local defaults (guide section 9 and
-section 2.2): shuffle partitions derive from core count and input size rather
-than a constant tuned for one deployment; AQE coalesces the rest at runtime.
+Scale-adaptive with local defaults (guide section 9 and section 2.2): shuffle
+partitions derive from core count and input size rather than a constant tuned
+for one deployment; AQE coalesces the rest at runtime.  Every setting here is
+needed by a test or a measurement named next to it; anything else (a RocksDB
+state store, say) is selected with Spark's own `--conf` or
+spark-defaults.conf.
 """
 
 from __future__ import annotations
@@ -22,9 +25,6 @@ def shuffle_partitions(cpus: int, sf_dir: str | None) -> int:
     post-shuffle partitions stay in the 100MB-1GB band on big inputs
     (guide section 2.2).  AQE coalescing trims the excess at runtime.
     """
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     n = max(2, cpus)
     if sf_dir and os.path.isdir(sf_dir):
         target = 256 * 1024 * 1024  # advisory post-shuffle partition size
@@ -35,29 +35,33 @@ def shuffle_partitions(cpus: int, sf_dir: str | None) -> int:
 def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"):
     from pyspark.sql import SparkSession
 
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        # TIMESTAMP casts read the UTC wall clock the data is written in: under
+        # America/New_York tests/test_streaming.py::test_windowed_counts_matches_batch fails.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", mem)
+        # Deployment setting: local mode runs everything in the driver's heap.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # `perfbench/run.py --trace` turns the UI on to poll its REST API.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # Pinned by tests/test_session.py::test_shuffle_partitions_follow_cores_and_input.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions(cpus, sf_dir)))
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Let AQE rewrite a planned sort-merge join to a shuffled hash join
         # when every post-shuffle partition's build side fits locally (guide
         # 3.1: removes both sorts).  Default 0 = off; the value is Spark's
         # default advisory post-shuffle partition size (AQE coalesces
         # partitions toward it, so a qualifying build side is ~one partition).
-        # Inert at local SFs where these joins are broadcast anyway.
+        # Inert at local SFs where these joins are broadcast anyway; pinned by
+        # tests/test_session.py::test_aqe_picks_shuffled_hash_join.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Compiled-class cache for generated code (static conf, so it must be
         # set before the session starts).  The 17 batch queries generate ~200
         # distinct classes at sf0.001 and sf0.1, the two stream operators 30.
         # At the default of 100 every warm pass evicts and recompiles 150-190
         # of them with Janino; 1000 holds the whole working set, so a
-        # repeated query compiles its code once per session.
+        # repeated query compiles its code once per session.  Pinned by
+        # tests/test_session.py::test_warm_pass_compiles_nothing.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Streaming checkpoints (offset and commit logs, HDFS-backed and
         # RocksDB state stores) rename through FileSystem.rename instead of
@@ -73,26 +77,12 @@ def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"
         # deletes the target first); a no-overwrite rename is
         # check-then-rename under both managers, and Spark's checksum files
         # are the same.  A checkpoint on HDFS or an object store should keep
-        # Spark's FileContext default; the engine writes none.
+        # Spark's FileContext default; the engine writes none.  Pinned by
+        # tests/test_streaming.py::test_stream_checkpoint_forks_no_readlink.
         .config("spark.sql.streaming.checkpointFileManagerClass",
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
+        .getOrCreate()
     )
-    # Streaming state store: the default in-memory HDFS-backed provider keeps
-    # every in-watermark key on-heap, which is the streaming path's scale
-    # killer (guide section 5).  Production value: RocksDB
-    # (SPARK_GRAFT_STATESTORE=rocksdb); local default stays the in-memory
-    # provider so the bench/test environment is unchanged.
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        builder = (builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-            # Changelog checkpointing uploads per-batch deltas instead of
-            # RocksDB snapshots: checkpoint cost scales with the batch's
-            # changed keys, not the total in-watermark state (the thing that
-            # is huge at the 100 TB design point).
-            .config("spark.sql.streaming.stateStore.rocksdb"
-                    ".changelogCheckpointing.enabled", "true"))
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -49,9 +49,9 @@ def stream_dedup(events: DataFrame) -> DataFrame:
     watermark: a record is a duplicate only if both its id and timestamp
     repeat.  (ts must be part of the key for the watermark to bound state.)
 
-    At scale the dedup state holds every in-watermark key; run with
-    SPARK_GRAFT_STATESTORE=rocksdb (engine.session) so state lives in
-    RocksDB instead of the executor heap."""
+    At scale the dedup state holds every in-watermark key; select the RocksDB
+    state store (and its changelog checkpointing) with Spark's own `--conf` or
+    spark-defaults.conf so state lives off the executor heap."""
     return events.withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
 
 

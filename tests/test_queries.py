@@ -15,23 +15,17 @@ from engine.tables import path
 from tests.conftest import SF_SMOKE
 
 # Rows appended to sf0.001's events: a type whose values are constant
-# (sigma = 0), a type whose values are all zero (max = 0), and a click with
-# a NULL user_id.
+# (sigma = 0), a type whose values are all zero (max = 0), a click with a
+# NULL user_id, and an `edge` type whose values sit on both sides of
+# behavior_classify's thresholds (5000 and 20000 cents) and past its
+# least(value_c, 50000) clamp.
+EDGE_VALUES = (-1.0, 0.0, 49.99, 50.0, 50.01, 199.99, 200.0, 200.01, 10_000_000.0)
 ADVERSARIAL_EVENTS = (
     [(10_000 + i, f"2024-01-15 12:0{i}:00", i, "const", 5.0) for i in range(3)]
     + [(10_003 + i, f"2024-01-16 12:0{i}:00", i, "zeros", 0.0) for i in range(3)]
     + [(10_006, "2024-01-17 12:00:00", None, "click", 1.0)]
+    + [(10_007 + i, f"2024-01-18 12:0{i}:00", i, "edge", v) for i, v in enumerate(EDGE_VALUES)]
 )
-
-# Known divergences on the adversarial data, left for the degenerate-input
-# robustness work (ROADMAP item 3).
-ADVERSARIAL_XFAIL = {
-    "zscore_normalize": "ROADMAP item 3: sigma = 0 raises [DIVIDE_BY_ZERO] under ANSI",
-    "anomaly_users": "ROADMAP item 3: sigma = 0 raises [DIVIDE_BY_ZERO] under ANSI",
-    "reliability_bins": "ROADMAP item 3: max = 0 raises [DIVIDE_BY_ZERO] under ANSI",
-    "dominant_behavior": "ROADMAP item 3: Spark keeps the NULL user_id group, "
-                         "the oracle's self-join drops it",
-}
 
 
 @pytest.fixture(scope="module")
@@ -71,10 +65,7 @@ def test_oracle_parity(spark, duck, name):
     assert rel.fetchone() is not None, f"{name} returned no rows"
 
 
-@pytest.mark.parametrize("name", [
-    pytest.param(n, marks=pytest.mark.xfail(strict=True, reason=ADVERSARIAL_XFAIL[n]))
-    if n in ADVERSARIAL_XFAIL else n
-    for n in sorted(QUERIES)])
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_oracle_parity_adversarial(spark, adversarial, name):
     sf_dir, con = adversarial
     q = QUERIES[name]

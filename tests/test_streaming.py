@@ -105,9 +105,9 @@ def test_stream_dedup_drops_late_rows(spark, tmp_path):
 
 def test_stream_dedup_rocksdb_statestore(spark):
     """The production state-store config (r10): stream_dedup must produce the
-    same result with the RocksDB provider and changelog checkpointing that
-    SPARK_GRAFT_STATESTORE=rocksdb selects in engine.session.  Changelog
-    uploads go through the session's checkpoint file manager."""
+    same result with the RocksDB provider and changelog checkpointing, which
+    a deployment selects with Spark's own `--conf` or spark-defaults.conf.
+    Changelog uploads go through the session's checkpoint file manager."""
     confs = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

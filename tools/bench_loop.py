@@ -2,7 +2,9 @@
 
 Alternates `python bench.py` between two checkouts (baseline, head) so host
 noise hits both sides equally; appends each run's parsed JSON line (tagged
-with side/cpus/timestamp) to the output file after every run.
+with side/cpus/timestamp) to the output file after every run.  A run that
+prints no JSON line stops the loop with its exit code and stderr tail; the
+runs written before it stay in the file.
 
 Usage: python tools/bench_loop.py <out.json> <n_rounds> <cpus> <dirA> <dirB> [dirC ...]
 """
@@ -21,8 +23,12 @@ def run_once(repo: str, cpus: int, sf_dir: str) -> dict:
     t0 = time.time()
     out = subprocess.run([sys.executable, os.path.join(repo, "bench.py")],
                          capture_output=True, text=True, env=env, cwd=repo)
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    rec = json.loads(line)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if not lines:
+        tail = "\n".join(out.stderr.splitlines()[-20:])
+        raise SystemExit(f"bench.py in {repo} exited {out.returncode} without its "
+                         f"JSON line; last stderr lines:\n{tail}")
+    rec = json.loads(lines[-1])
     rec["side"] = repo
     rec["wall_s"] = round(time.time() - t0, 1)
     rec["t"] = round(t0, 1)
