@@ -137,6 +137,28 @@ def test_fingerprint_hex_roundtrip(texts_df):
         assert r.old == r.new, f"hex roundtrip diverged for text #{r.id}"
 
 
+def test_behavior_code_equivalence(spark):
+    """The r10 1-byte behavior code must induce exactly the same groups and
+    decode to exactly the same label as the direct CASE on value_c, across
+    the threshold boundaries."""
+    vals = [-100, 0, 1, 4999, 5000, 5001, 19999, 20000, 20001, 50000, 10**9]
+    df = spark.createDataFrame([(v,) for v in vals], "value_c long")
+    label = (F.when(F.col("value_c") >= 20000, F.lit("surge"))
+              .when(F.col("value_c") >= 5000, F.lit("active"))
+              .otherwise(F.lit("idle")))
+    code = (F.when(F.col("value_c") >= 20000, F.lit(2))
+             .when(F.col("value_c") >= 5000, F.lit(1))
+             .otherwise(F.lit(0))).cast("tinyint")
+    decoded = (F.when(F.col("c") == 2, F.lit("surge"))
+                .when(F.col("c") == 1, F.lit("active"))
+                .otherwise(F.lit("idle")))
+    rows = (df.select("value_c", label.alias("old"), code.alias("c"))
+              .select("value_c", "old", decoded.alias("new"))
+              .collect())
+    for r in rows:
+        assert r.old == r.new, f"behavior label diverged for value_c={r.value_c}"
+
+
 def test_anchor_two_step_hash_equivalence(spark):
     """The r10 two-step anchor path (hash-agg min(vec_id) per label, then
     broadcast-fetch the anchor row by vec_id) must return exactly the rows the
