@@ -527,11 +527,15 @@ FROM r
 # to `_EVENTS_C` as the CTE `stats`.  value_c^2 is ~2.5e9 per row, so a BIGINT
 # sum wraps past ~3.7e9 rows per event type (the 100 TB design point is
 # ~1e11-1e12 rows/type): sum the squares as decimal(38,0) (exact int128,
-# mirrors DuckDB's HUGEINT sum; the double cast of the same exact integer is
-# bit-identical).  sum_c itself stays BIGINT: |value_c| <= ~5e4 keeps it exact
-# to ~2e14 rows/type.  The stats side is <= |event_type| rows by construction,
-# so the queries broadcast it explicitly and the events side is never shuffled
-# at any scale (guide 3.1).
+# mirrors DuckDB's HUGEINT sum).  sum_c itself stays BIGINT: |value_c| <= ~5e4
+# keeps it exact to ~2e14 rows/type.  The variance numerator
+# n*sumsq_c - sum_c^2 is computed in decimal(38,0) too (HUGEINT in the
+# oracle), so it is exact and never negative; sigma = sqrt(double of it) / n.
+# The double form sumsq/n - (sum/n)^2 can cancel below zero on near-constant
+# large values (10,000,000.07, .07, .08 give -128), whose sqrt is NaN.  A
+# constant type gets sigma 0, hence the nullif below.  The stats side is <= |event_type|
+# rows by construction, so the queries broadcast it explicitly and the events
+# side is never shuffled at any scale (guide 3.1).
 _TYPE_STATS = """, type_sums AS (
   SELECT event_type, count(1) AS n, sum(value_c) AS sum_c,
          sum(CAST(value_c * value_c AS DECIMAL(38,0))) AS sumsq_c
@@ -539,21 +543,18 @@ _TYPE_STATS = """, type_sums AS (
 ), stats AS (
   SELECT event_type, n AS n_type,
          CAST(sum_c AS DOUBLE) / CAST(n AS DOUBLE) / 100.0D AS mu,
-         sqrt(CAST(sumsq_c AS DOUBLE) / CAST(n AS DOUBLE)
-              - (CAST(sum_c AS DOUBLE) / CAST(n AS DOUBLE))
-                * (CAST(sum_c AS DOUBLE) / CAST(n AS DOUBLE))) / 100.0D AS sigma,
+         sqrt(CAST(n * sumsq_c - CAST(sum_c AS DECIMAL(38,0)) * sum_c AS DOUBLE))
+           / CAST(n AS DOUBLE) / 100.0D AS sigma,
          sum_c
   FROM type_sums
 )"""
 
 _TYPE_STATS_ORACLE = """
-  SELECT event_type, count(*) AS n_type,
-         CAST(sum(value_c) AS BIGINT) AS sum_c,
-         sum(value_c*value_c) AS sumsq_c,
+  SELECT event_type,
          CAST(sum(value_c) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 100.0 AS mu,
-         sqrt(CAST(sum(value_c*value_c) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-              - (CAST(sum(value_c) AS DOUBLE) / CAST(count(*) AS DOUBLE))
-                * (CAST(sum(value_c) AS DOUBLE) / CAST(count(*) AS DOUBLE))) / 100.0 AS sigma
+         sqrt(CAST(count(*) * sum(CAST(value_c AS HUGEINT) * value_c)
+                   - CAST(sum(value_c) AS HUGEINT) * CAST(sum(value_c) AS HUGEINT) AS DOUBLE))
+           / CAST(count(*) AS DOUBLE) / 100.0 AS sigma
   FROM c GROUP BY event_type
 """
 
@@ -696,23 +697,28 @@ FROM j GROUP BY event_type
 # Only the first 8 tokens matter, so extract just that prefix (the anchored
 # greedy regex stops scanning after the 8th token) instead of normalizing,
 # splitting and materializing a token array for the whole document (guide 1.2
-# step 2: per-task work; same fingerprint, O(prefix) not O(doc)).  lower()
-# runs on the extracted prefix, not the whole document: case mapping never
-# produces or consumes whitespace, so token boundaries -- and hence the
-# extracted prefix -- are identical either way (including conditional
-# mappings: a final sigma stays word-final at the prefix end because the regex
-# never cuts mid-token).  Measured 1.45x on 2.7 KB docs (OPTIMIZATION_r10.md);
-# see test_lower_prefix_commutes.
+# step 2: per-task work; same fingerprint, O(prefix) not O(doc)).
+# Normalization is an ASCII case fold (translate A-Z -> a-z) and whitespace
+# is Java's regex \s, [ \t\n\x0B\f\r]; the oracle writes that class out,
+# because RE2's \s lacks \x0B.  No Unicode case mapping is bit-identical in
+# both engines: Spark's lower() and DuckDB's differ on 143 code points in
+# U+0020-U+2FFFF (final sigma, dotted capital I, and 140 from their different
+# Unicode versions), so non-ASCII capitals keep their case on both sides.  The
+# fold maps one code point to one and never touches whitespace, so it runs on
+# the extracted prefix only, which keeps the r10 prefix-only lowercasing win
+# (1.45x on 2.7 KB docs, OPTIMIZATION_r10.md).  The `documents` rows of
+# tests/test_queries.py's ADVERSARIAL dataset cover these edges.
 # Shuffle the 16-byte binary digest, not the 32-char hex string, and re-hex
 # only the grouped output rows (guide 2.3 "narrower types" -- the group key is
 # most of each shuffled row here).  lower(hex(unhex(h))) is the identity on
-# md5's lowercase-hex output, so the emitted fingerprint is byte-identical
-# (see test_fingerprint_hex_roundtrip).
+# md5's lowercase-hex output, so the emitted fingerprint is byte-identical.
 DEDUP_DOCS = r"""
 WITH d AS (
   SELECT doc_id,
          unhex(md5(array_join(sort_array(filter(
-             split(lower(regexp_extract(text, '^\\s*(?:\\S+\\s+){{0,7}}\\S*', 0)), '\\s+'),
+             split(translate(regexp_extract(text, '^\\s*(?:\\S+\\s+){{0,7}}\\S*', 0),
+                             'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
+                   '\\s+'),
              x -> x != '')), ' '))) AS fp_bin,
          n_chars
   FROM {documents}
@@ -729,7 +735,9 @@ DEDUP_DOCS_ORACLE = """
 WITH d AS (
   SELECT doc_id,
          md5(array_to_string(list_sort(list_slice(
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
+             string_split(trim(regexp_replace(
+                 translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
+                 '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '),
              1, 8)), ' ')) AS fingerprint,
          n_chars
   FROM documents
@@ -792,6 +800,10 @@ def _dot(a: str, b: str) -> str:
 # narrow columns (guide 2.3 "shuffle keys and metadata instead of payloads",
 # 1.2 step 1).  vec_id is unique, so the fetch returns exactly the min_by row
 # per label.
+# A zero vector (or a zero anchor) has norm 0: try_divide makes its sim NULL,
+# as DuckDB's x / 0.0 does, instead of ANSI's DIVIDE_BY_ZERO, and both
+# rankings put NULL sims last.  (nullif on the non-column denominator would
+# plan one more Project.)
 # Cardinality bound for the broadcasts: anchor_ids / anchors have exactly one
 # row per distinct `label`, and label is a small enum in this schema (tens of
 # values; ~1.7 KB per anchor row with the 64-double vector).  The hints are
@@ -809,12 +821,13 @@ WITH anchor_ids AS (
   FROM fetched
 ), scored AS (
   SELECT /*+ BROADCAST(a) */ label, vec_id, anchor_id,
-         {_dot("embedding", "anchor_vec")}
-           / (sqrt({_dot("embedding", "embedding")}) * anchor_norm) AS sim
+         try_divide({_dot("embedding", "anchor_vec")},
+                    sqrt({_dot("embedding", "embedding")}) * anchor_norm) AS sim
   FROM {{embeddings}} JOIN anchors a USING (label)
   WHERE vec_id != anchor_id
 ), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY label ORDER BY sim DESC, vec_id ASC) AS rank
+  SELECT *, row_number() OVER (PARTITION BY label ORDER BY sim DESC NULLS LAST, vec_id ASC)
+              AS rank
   FROM scored
 )
 SELECT label, CAST(rank AS BIGINT) AS rank, vec_id, anchor_id, sim
@@ -836,7 +849,8 @@ WITH anchors AS (
   WHERE e.vec_id <> a.anchor_id
 )
 SELECT label, CAST(rank AS BIGINT) AS rank, vec_id, anchor_id, sim
-FROM (SELECT *, row_number() OVER (PARTITION BY label ORDER BY sim DESC, vec_id ASC) AS rank
+FROM (SELECT *, row_number() OVER (PARTITION BY label
+                                   ORDER BY sim DESC NULLS LAST, vec_id ASC) AS rank
       FROM scored)
 WHERE rank <= 5
 """

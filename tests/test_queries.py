@@ -1,7 +1,8 @@
 """Oracle-parity tests: `engine.oracle.compare` (row count, column names and
 type families, order-insensitive exact values) for every declared query,
-against DuckDB on sf0.001 and on an adversarial copy of it with degenerate
-groups and a NULL key."""
+against DuckDB on sf0.001 and on an adversarial copy of it (`ADVERSARIAL`):
+degenerate groups, NULL keys and texts, Unicode and whitespace edge texts,
+zero vectors and tied similarities, all through the shipped SQL."""
 
 import shutil
 from decimal import Decimal
@@ -14,18 +15,80 @@ from engine.queries import QUERIES
 from engine.tables import path
 from tests.conftest import SF_SMOKE
 
-# Rows appended to sf0.001's events: a type whose values are constant
-# (sigma = 0), a type whose values are all zero (max = 0), a click with a
-# NULL user_id, and an `edge` type whose values sit on both sides of
-# behavior_classify's thresholds (5000 and 20000 cents) and past its
-# least(value_c, 50000) clamp.
+# Rows appended to sf0.001's tables, each table's rows in its column order.
+#
+# events: a type whose values are constant (sigma = 0), a type whose values
+# are all zero (max = 0), a click with a NULL user_id, an `edge` type whose
+# values sit on both sides of behavior_classify's thresholds (5000 and 20000
+# cents) and past its least(value_c, 50000) clamp, and a `near_const` type
+# whose double variance Σx²/n − (Σx/n)² cancels below zero.
 EDGE_VALUES = (-1.0, 0.0, 49.99, 50.0, 50.01, 199.99, 200.0, 200.01, 10_000_000.0)
-ADVERSARIAL_EVENTS = (
-    [(10_000 + i, f"2024-01-15 12:0{i}:00", i, "const", 5.0) for i in range(3)]
-    + [(10_003 + i, f"2024-01-16 12:0{i}:00", i, "zeros", 0.0) for i in range(3)]
-    + [(10_006, "2024-01-17 12:00:00", None, "click", 1.0)]
-    + [(10_007 + i, f"2024-01-18 12:0{i}:00", i, "edge", v) for i, v in enumerate(EDGE_VALUES)]
+NEAR_CONST_VALUES = (10_000_000.07, 10_000_000.07, 10_000_000.08)
+EVENTS = (
+    [(10_000 + i, f"2024-01-15 12:0{i}:00", i, "const", 5.0, None) for i in range(3)]
+    + [(10_003 + i, f"2024-01-16 12:0{i}:00", i, "zeros", 0.0, None) for i in range(3)]
+    + [(10_006, "2024-01-17 12:00:00", None, "click", 1.0, None)]
+    + [(10_007 + i, f"2024-01-18 12:0{i}:00", i, "edge", v, None)
+       for i, v in enumerate(EDGE_VALUES)]
+    + [(10_016 + i, f"2024-01-19 12:0{i}:00", i, "near_const", v, None)
+       for i, v in enumerate(NEAR_CONST_VALUES)]
 )
+
+# documents (lang `xx`, one `source` per text so doc_token_stats compares
+# each text's token count on its own): empty and whitespace-only texts, token
+# counts around dedup_docs' 8-token fingerprint window, mixed whitespace runs
+# (a vertical tab, which Java's regex \s matches and RE2's does not), leading
+# whitespace, one huge token, many tokens, capitals whose lower() differs
+# between Java and DuckDB (final sigma, dotted I, sharp s), an ASCII pair
+# that differs only in case and must share a fingerprint, and a NULL text.
+TEXTS = [
+    "",
+    " ",
+    "   \t\n  ",
+    "a",
+    " a ",
+    "a b",
+    "one two three four five six seven",
+    "one two three four five six seven eight",
+    "one two three four five six seven eight nine ten",
+    "a  b\tc\nd   e f\r\ng h i j",
+    "  leading and   trailing   ",
+    "UPPER Case MiXeD tokens HERE now More Than Eight Total",
+    "x" * 3000,
+    ("tok " * 500).strip(),
+    "ends with whitespace then token   z",
+    "ΒΙΒΛΟΣ one two three four five six seven eight",
+    "one two three four five six seven ΒΙΒΛΟΣ nine",
+    "one two three four five six seven eight ΒΙΒΛΟΣ",
+    "ΣΟΦΙΑ mid-token Σ stays non-final ΑΣΦ",
+    "İstanbul İİ ends İ",
+    "STRASSE straße ẞ groß",
+    "ΑΣ",
+    "a\x0bb c",
+    "Hello World of MIXED case tokens",
+    "hello world of mixed CASE tokens",
+    None,
+]
+DOCUMENTS = [(1000 + i, t, "xx", f"edge{i:02d}", None if t is None else len(t))
+             for i, t in enumerate(TEXTS)]
+
+# embeddings (64 floats): a zero vector in label 3, a one-row label 77, a
+# label 78 whose two non-anchor vectors are identical (their sims tie, so
+# vec_id orders them), and a label 80 whose anchor is the zero vector.
+ZERO = [0.0] * 64
+TIED = [float(i % 3) for i in range(64)]
+EMBEDDINGS = [
+    (1000, ZERO, 3),
+    (1001, [1.0] * 64, 77),
+    (1002, [float(i % 5) for i in range(64)], 78),
+    (1003, TIED, 78),
+    (1004, TIED, 78),
+    (1005, ZERO, 80),
+    (1006, [1.0] * 64, 80),
+    (1007, [float(i % 7) for i in range(64)], 80),
+]
+
+ADVERSARIAL = {"events": EVENTS, "documents": DOCUMENTS, "embeddings": EMBEDDINGS}
 
 
 @pytest.fixture(scope="module")
@@ -38,20 +101,16 @@ def duck():
 
 @pytest.fixture(scope="module")
 def adversarial(tmp_path_factory):
-    """A copy of sf0.001 whose events carry ADVERSARIAL_EVENTS, with a DuckDB
-    connection over it: (sf_dir, con)."""
+    """A copy of sf0.001 whose tables carry the ADVERSARIAL rows, with a
+    DuckDB connection over it: (sf_dir, con)."""
     sf_dir = str(tmp_path_factory.mktemp("adversarial") / "sf0.001")
     shutil.copytree(SF_SMOKE, sf_dir)
+    with duckdb.connect() as w:
+        for table, rows in ADVERSARIAL.items():
+            w.execute(f"CREATE TABLE {table} AS FROM '{path(SF_SMOKE, table)}'")
+            w.executemany(f"INSERT INTO {table} VALUES ({', '.join('?' * len(rows[0]))})", rows)
+            w.execute(f"COPY {table} TO '{path(sf_dir, table)}' (FORMAT parquet)")
     con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * FROM '{path(SF_SMOKE, 'events')}'
-                  UNION ALL
-                  SELECT CAST(id AS BIGINT), CAST(ts AS TIMESTAMP), CAST(uid AS BIGINT),
-                         typ, CAST(v AS DOUBLE), CAST(NULL AS VARCHAR)
-                  FROM (VALUES {", ".join("(?, ?, ?, ?, ?)" for _ in ADVERSARIAL_EVENTS)})
-                       AS t(id, ts, uid, typ, v))
-            TO '{path(sf_dir, 'events')}' (FORMAT parquet)""",
-        [c for row in ADVERSARIAL_EVENTS for c in row])
     views(con, sf_dir)
     yield sf_dir, con
     con.close()

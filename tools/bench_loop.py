@@ -2,9 +2,11 @@
 
 Alternates `python bench.py` between two checkouts (baseline, head) so host
 noise hits both sides equally; appends each run's parsed JSON line (tagged
-with side/cpus/timestamp) to the output file after every run.  A run that
-prints no JSON line stops the loop with its exit code and stderr tail; the
-runs written before it stay in the file.
+with side/cpus/timestamp) to the output file after every run.  Each write
+goes to `<out>.tmp` and is renamed over the output file, so a kill mid-write
+leaves the previous runs readable.  A run that prints no JSON line stops the
+loop with its exit code and stderr tail; the runs written before it stay in
+the file.
 
 Usage: python tools/bench_loop.py <out.json> <n_rounds> <cpus> <dirA> <dirB> [dirC ...]
 """
@@ -41,7 +43,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = []
     if os.path.exists(out_path):
-        runs = json.load(open(out_path))
+        with open(out_path) as f:
+            runs = json.load(f)
     for i in range(n):
         # Rotate the side order each round so periodic host load cannot
         # alias with one side's time slot (observed: a fixed order put the
@@ -50,7 +53,9 @@ def main() -> None:
         for d in order:
             rec = run_once(d, cpus, sf_dir)
             runs.append(rec)
-            json.dump(runs, open(out_path, "w"), indent=1)
+            with open(out_path + ".tmp", "w") as f:
+                json.dump(runs, f, indent=1)
+            os.replace(out_path + ".tmp", out_path)
             print(f"round {i} {d}: total={rec['value']} wall={rec['wall_s']}", flush=True)
 
 
