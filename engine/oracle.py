@@ -1,5 +1,8 @@
-"""The DuckDB oracle check: a query's Spark output against its oracle SQL,
-shared by the parity tests and tools/check_oracle.py."""
+"""The DuckDB oracle check: a query's Spark output against its oracle SQL.
+
+tests/test_queries.py::test_oracle_parity runs it for every query on sf0.001,
+sf0.01, sf0.1 and an adversarial copy of sf0.001, and
+tests/test_streaming.py for the windowed stream counts."""
 
 from __future__ import annotations
 
@@ -37,12 +40,13 @@ def _family(t: str) -> str:
 
 
 def compare(sdf, rel) -> list[str]:
-    """Row count, column name, type family and value differences, one message each."""
+    """An empty oracle result, and row count, column name, type family and
+    value differences, one message each.  Runs the oracle once."""
     s_rows, d_rows = sdf.collect(), rel.fetchall()
     s_cols = [f.name for f in sdf.schema.fields]
     s_types = [_family(f.dataType.simpleString()) for f in sdf.schema.fields]
     d_types = [_family(str(t)) for t in rel.types]
-    problems = []
+    problems = [] if d_rows else ["the oracle returned no rows"]
     if len(s_rows) != len(d_rows):
         problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
     if s_cols != rel.columns:

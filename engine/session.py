@@ -18,7 +18,7 @@ def input_bytes(sf_dir: str) -> int:
     return sum(os.path.getsize(p) for p in glob.glob(f"{sf_dir.rstrip('/')}/*.parquet"))
 
 
-def shuffle_partitions(cpus: int, sf_dir: str | None) -> int:
+def shuffle_partitions(cpus: int, sf_dir: str) -> int:
     """Derive shuffle parallelism from cores and input scale.
 
     Local rule: at least the core count (keep every core busy), scaled up so
@@ -26,13 +26,11 @@ def shuffle_partitions(cpus: int, sf_dir: str | None) -> int:
     (guide section 2.2).  AQE coalescing trims the excess at runtime.
     """
     n = max(2, cpus)
-    if sf_dir and os.path.isdir(sf_dir):
-        target = 256 * 1024 * 1024  # advisory post-shuffle partition size
-        n = max(n, min(4 * n, input_bytes(sf_dir) // target))
-    return int(n)
+    target = 256 * 1024 * 1024  # advisory post-shuffle partition size
+    return max(n, min(4 * n, input_bytes(sf_dir) // target))
 
 
-def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"):
+def build_session(cpus: int, sf_dir: str, app_name: str = "engine"):
     from pyspark.sql import SparkSession
 
     spark = (

@@ -32,12 +32,12 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sf_dir.rstrip("/")))
 
 
-def windowed_counts(events: DataFrame, window: str = "6 hours") -> DataFrame:
+def windowed_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window per-type counts and exact value sums (cents)."""
     value_c = F.round(F.col("value") * 100, 0).cast("long")
     return (events
             .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", window), "event_type")
+            .groupBy(F.window("ts", "6 hours"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum(value_c).alias("sum_value_c"))
             .select(F.col("window.start").alias("w_start"),
@@ -55,11 +55,11 @@ def stream_dedup(events: DataFrame) -> DataFrame:
     return events.withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
 
 
-def run_to_memory(df: DataFrame, name: str | None = None, mode: str = "append") -> str:
+def run_to_memory(df: DataFrame, mode: str = "append") -> str:
     """Drive a streaming DataFrame to completion into a memory sink in output
     mode `mode` ("append", or "complete" for aggregations); returns the
-    queryable table name."""
-    name = name or f"s_{uuid.uuid4().hex[:8]}"
+    queryable table name, a fresh uuid-based one per call."""
+    name = f"s_{uuid.uuid4().hex[:8]}"
     q = (df.writeStream.outputMode(mode)
          .format("memory").queryName(name).start())
     try:
@@ -69,6 +69,6 @@ def run_to_memory(df: DataFrame, name: str | None = None, mode: str = "append") 
     return name
 
 
-def run_aggregation_to_memory(df: DataFrame, name: str | None = None) -> str:
+def run_aggregation_to_memory(df: DataFrame) -> str:
     """run_to_memory in complete mode, for aggregations."""
-    return run_to_memory(df, name, mode="complete")
+    return run_to_memory(df, mode="complete")

@@ -5,8 +5,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_SMOKE = "/root/testdata/sf0.001"
-SF_ORACLE = "/root/testdata/sf0.01"
+# The generated test data at three scale factors.
+SF_DIRS = tuple(f"/root/testdata/sf{sf}" for sf in ("0.001", "0.01", "0.1"))
+SF_SMOKE = SF_DIRS[0]
 
 
 @pytest.fixture(scope="session")
@@ -14,6 +15,6 @@ def spark():
     from engine.session import build_session
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
-    spark = build_session(4, sf_dir=SF_SMOKE, app_name="tests")
+    spark = build_session(4, SF_SMOKE, app_name="tests")
     yield spark
     spark.stop()

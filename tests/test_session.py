@@ -1,13 +1,12 @@
 """Session configuration that the whole engine relies on."""
 
 import io
-import os
 from contextlib import redirect_stdout
 
 from engine.queries import QUERIES
 from engine.session import shuffle_partitions
 from engine.tables import load
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_DIRS, SF_SMOKE
 
 
 def _compiled_classes(spark) -> int:
@@ -71,8 +70,7 @@ def test_shuffle_partitions_follow_cores_and_input(tmp_path):
 
     assert shuffle_partitions(4, sparse_dir("2g", 2)) == 8
     assert shuffle_partitions(4, sparse_dir("8g", 8)) == 16
-    assert shuffle_partitions(4, os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")) == 4
-    assert shuffle_partitions(1, None) == 2
+    assert shuffle_partitions(4, SF_DIRS[-1]) == 4
     assert shuffle_partitions(1, SF_SMOKE) == 2
 
 

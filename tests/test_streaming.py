@@ -1,15 +1,17 @@
 """Streaming operators: windowed counts and dedup driven to completion on the
-sf0.001 events data; aggregates cross-checked against the batch analog."""
+sf0.001 events data; the windowed counts checked against DuckDB."""
 
 import os
 from collections import Counter
 from datetime import datetime, timedelta, timezone
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from engine import streaming
+from engine.oracle import compare
+from engine.tables import path
 from tests.conftest import SF_SMOKE
 
 
@@ -27,21 +29,20 @@ def _write_events(path, keys, n):
 
 
 def test_windowed_counts_matches_batch(spark):
-    stream = streaming.read_event_stream(spark, SF_SMOKE)
-    agg = streaming.windowed_counts(stream)
-    table = streaming.run_to_memory(agg, mode="complete")
-    got = {(r.w_start, r.event_type): (r.n, r.sum_value_c)
-           for r in spark.table(table).collect()}
-    assert got
-
-    batch = (spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-             .withColumn("ts", F.col("ts").cast("timestamp")))
-    value_c = F.round(F.col("value") * 100, 0).cast("long")
-    expect = {(r["window"].start, r.event_type): (r.n, r.s)
-              for r in (batch.groupBy(F.window("ts", "6 hours"), "event_type")
-                        .agg(F.count(F.lit(1)).alias("n"), F.sum(value_c).alias("s"))
-                        .collect())}
-    assert got == expect
+    """The streamed 6-hour counts and cent sums equal DuckDB's batch
+    aggregate of the events file."""
+    window_us = 6 * 3_600_000_000
+    table = streaming.run_aggregation_to_memory(
+        streaming.windowed_counts(streaming.read_event_stream(spark, SF_SMOKE)))
+    with duckdb.connect() as con:
+        assert compare(
+            spark.table(table).selectExpr("unix_micros(w_start) AS w_start_us",
+                                          "event_type", "n", "sum_value_c"),
+            con.sql(f"""
+                SELECT epoch_us(ts) // {window_us} * {window_us} AS w_start_us, event_type,
+                       count(*) AS n,
+                       CAST(sum(CAST(round(value*100, 0) AS BIGINT)) AS BIGINT) AS sum_value_c
+                FROM '{path(SF_SMOKE, "events")}' GROUP BY 1, 2""")) == []
 
 
 def test_stream_dedup(spark):

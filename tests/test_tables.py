@@ -1,7 +1,6 @@
 """The declared table schemas: equal to what the files hold, free of Spark
 jobs to read, and timezone-free for timestamps."""
 
-import os
 from datetime import datetime
 
 import pyarrow as pa
@@ -9,9 +8,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from engine.tables import TABLES, load, path
-from tests.conftest import SF_ORACLE, SF_SMOKE
-
-SF_DIRS = (SF_SMOKE, SF_ORACLE, os.path.join(os.path.dirname(SF_SMOKE), "sf0.1"))
+from tests.conftest import SF_DIRS, SF_SMOKE
 
 
 def _jobs_in_group(spark, group, fn):
