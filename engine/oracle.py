@@ -1,6 +1,6 @@
 """The DuckDB oracle check: a query's Spark output against its oracle SQL.
 
-tests/test_queries.py::test_oracle_parity runs it for every query on sf0.001,
+tests/test_queries.py::check_parity runs it for every query on sf0.001,
 sf0.01, sf0.1 and an adversarial copy of sf0.001, and
 tests/test_streaming.py for the windowed stream counts."""
 

@@ -110,32 +110,53 @@ ADVERSARIAL = {"lineitem": LINEITEM, "events": EVENTS, "documents": DOCUMENTS,
                "embeddings": EMBEDDINGS}
 
 
-@pytest.fixture(scope="module", params=[*SF_DIRS, "adversarial"], ids=os.path.basename)
-def dataset(request, tmp_path_factory):
-    """(sf_dir, DuckDB connection over it) for each data set: the three scale
-    factors as generated, and `adversarial`, a copy of sf0.001 whose tables
-    carry the ADVERSARIAL rows."""
-    sf_dir = request.param
-    if sf_dir == "adversarial":
-        sf_dir = str(tmp_path_factory.mktemp("adversarial") / "sf0.001")
-        shutil.copytree(SF_SMOKE, sf_dir)
-        with duckdb.connect() as w:
-            for table, rows in ADVERSARIAL.items():
-                w.execute(f"CREATE TABLE {table} AS FROM '{path(SF_SMOKE, table)}'")
-                w.executemany(f"INSERT INTO {table} VALUES ({', '.join('?' * len(rows[0]))})",
-                              rows)
-                w.execute(f"COPY {table} TO '{path(sf_dir, table)}' (FORMAT parquet)")
-    con = duckdb.connect()
-    views(con, sf_dir)
-    yield sf_dir, con
-    con.close()
+@pytest.fixture(scope="module")
+def dataset(tmp_path_factory):
+    """dataset(name) -> (sf_dir, DuckDB connection over it), built once per
+    name: a generated scale-factor dir as is, or `adversarial`, a copy of
+    sf0.001 whose tables carry the ADVERSARIAL rows."""
+    built = {}
+
+    def get(name):
+        if name not in built:
+            sf_dir = name
+            if name == "adversarial":
+                sf_dir = str(tmp_path_factory.mktemp("adversarial") / "sf0.001")
+                shutil.copytree(SF_SMOKE, sf_dir)
+                with duckdb.connect() as w:
+                    for table, rows in ADVERSARIAL.items():
+                        w.execute(f"CREATE TABLE {table} AS FROM '{path(SF_SMOKE, table)}'")
+                        w.executemany(
+                            f"INSERT INTO {table} VALUES ({', '.join('?' * len(rows[0]))})", rows)
+                        w.execute(f"COPY {table} TO '{path(sf_dir, table)}' (FORMAT parquet)")
+            con = duckdb.connect()
+            views(con, sf_dir)
+            built[name] = sf_dir, con
+        return built[name]
+
+    yield get
+    for _, con in built.values():
+        con.close()
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_oracle_parity(spark, dataset, name):
+def check_parity(spark, dataset, name):
     sf_dir, con = dataset
     q = QUERIES[name]
     assert compare(q.fn(spark, sf_dir), con.sql(q.oracle)) == []
+
+
+# sf0.001's cases keep the bare query name as their id; the larger scale
+# factors prefix theirs with the data set, e.g. `sf0.1-mae_eval`.
+@pytest.mark.parametrize("sf_dir, name", [
+    pytest.param(sf, name, id=name if sf == SF_SMOKE else f"{os.path.basename(sf)}-{name}")
+    for sf in SF_DIRS for name in sorted(QUERIES)])
+def test_oracle_parity(spark, dataset, sf_dir, name):
+    check_parity(spark, dataset(sf_dir), name)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_oracle_parity_adversarial(spark, dataset, name):
+    check_parity(spark, dataset("adversarial"), name)
 
 
 def test_null_nan_signed_zero_and_mixed_types_sort_exactly():
