@@ -15,9 +15,14 @@ Writing the texts:
 * The texts go through Python's string formatter, so literal braces are
   doubled (a regex `{{0,7}}`).  Spark SQL unescapes backslashes in string
   literals, so the regex `\s+` is written `'\\s+'` (in a raw Python string).
-* A rewrite can change a physical plan without changing the answer;
-  `tools/dump_plans.py` writes normalized plans that diff directly against
-  another checkout's.
+* A Spark text departs from its oracle's direct form only to change a plan
+  (an Exchange, sort or join it removes, or a broadcast at scale) or an
+  answer (an adversarial row of tests/test_queries.py that the direct form
+  gets wrong), and its comment names which.  The plan gate tells the two
+  kinds apart from text the optimizer erases: `tools/dump_plans.py` writes
+  normalized plans that diff directly against another checkout's, so a
+  construct whose removal leaves the dumps at sf0.001 and sf0.1 identical
+  changes no plan.
 
 Numerical discipline (so the DuckDB oracle value-hash matches bit-for-bit):
 
@@ -63,11 +68,9 @@ class Query:
 
 # TPC-H Q1 analog: per (returnflag, linestatus) pricing summary.
 # The disc/charge products are ~1e9/~1e11 per row, so a BIGINT sum wraps past
-# ~1e8-1e10 rows per group (TPC-H Q1 has 4 groups; the 100 TB design point is
-# ~1e11 rows/group).  Sum them as decimal(38,0): exact integer arithmetic
-# (int128-backed), order-independent, still partial-aggregated map-side, and
-# it mirrors DuckDB's HUGEINT sum.  The final cast of the same exact integer
-# to double is bit-identical to the long path.
+# ~1e8-1e10 rows per group.  Both sum as decimal(38,0), exact and
+# order-independent like DuckDB's HUGEINT sum; as plain sums they abort with
+# ARITHMETIC_OVERFLOW on the adversarial `lineitem` rows.
 PRICING_SUMMARY = """
 WITH li AS (
   SELECT l_returnflag, l_linestatus,
@@ -76,7 +79,7 @@ WITH li AS (
          CAST(round(l_discount * 100, 0) AS BIGINT) AS disc_c,
          CAST(round(l_tax * 100, 0) AS BIGINT) AS tax_c
   FROM {lineitem}
-  WHERE l_shipdate <= CAST('2000-09-02 00:00:00' AS TIMESTAMP_NTZ)
+  WHERE l_shipdate <= TIMESTAMP_NTZ'2000-09-02 00:00:00'
 ), g AS (
   SELECT l_returnflag, l_linestatus,
          sum(qty) AS sum_qty,
@@ -130,9 +133,9 @@ FROM g
 
 
 # Top-3 customers by lineitem revenue within each nation.
-# Aggregate before joining (guide 2.3): per-orderkey partial sums make the
-# orderkey shuffle carry one row per order instead of one per line, and the
-# custkey aggregation runs on order-grain rows before customer is attached.
+# Aggregate before joining: per-orderkey partial sums make the orderkey
+# shuffle carry one row per order instead of one per line, and the custkey
+# aggregation runs on order-grain rows before customer is attached.
 TOP_CUSTOMERS = """
 WITH li AS (
   SELECT l_orderkey,
@@ -146,10 +149,10 @@ WITH li AS (
   FROM per_order JOIN {orders} ON l_orderkey = o_orderkey
   GROUP BY o_custkey
 ), rev AS (
-  SELECT /*+ BROADCAST(n) */ *
+  SELECT *
   FROM per_cust
   JOIN {customer} ON o_custkey = c_custkey
-  JOIN {nation} n ON c_nationkey = n_nationkey
+  JOIN {nation} ON c_nationkey = n_nationkey
 ), ranked AS (
   SELECT *, row_number() OVER (PARTITION BY n_name ORDER BY rev_u DESC, c_custkey ASC) AS rank
   FROM rev
@@ -179,12 +182,12 @@ FROM ranked WHERE rank <= 3
 
 
 # Revenue and volume per part type.
-# Aggregate lineitem per partkey before the join (guide 2.3/3): the join then
-# runs at part grain; retailprice is weighted by the line count so the result
-# is identical to joining at line grain.  Per-part rev_u stays BIGINT (bounded
-# by lines-per-part), but the per-type total is ~4e18 at the 100 TB design
-# point -- borderline int64 -- so the second-level sum is decimal(38,0)
-# (exact, mirrors DuckDB HUGEINT).
+# Aggregate lineitem per partkey before the join: the join then runs at part
+# grain; retailprice is weighted by the line count so the result is identical
+# to joining at line grain.  Per-part rev_u stays BIGINT (bounded by
+# lines-per-part), but the per-type total can pass int64, so it sums as
+# decimal(38,0) (DuckDB's HUGEINT); as a plain sum it aborts with
+# ARITHMETIC_OVERFLOW on the adversarial `lineitem` rows.
 PART_TYPE_REVENUE = """
 WITH li AS (
   SELECT l_partkey,
@@ -239,11 +242,19 @@ FROM g
 # Telemetry pipeline (reference capabilities mapped onto `events`)
 # ---------------------------------------------------------------------------
 
-# The events columns the telemetry queries start from, `value` in exact cents.
+# The events columns the telemetry queries start from, `value` in exact cents
+# and `ts` in epoch microseconds.  gap_stats, sessionize, window_features and
+# dominant_behavior partition their windows by user_id, so one user's events
+# are one task's work.  At sf0.1 (DuckDB over events.parquet) 1,500 users hold
+# 100,000 events: median 66 per user, p99 86, max 99, no NULL user_id.
+# Running windows (lag, a running sum, a 3-row frame) cannot be salted: each
+# row needs the rows before it in the same partition, and a salt would cut a
+# user's timeline at every salt boundary.
 _EVENTS_C = """
 WITH ev AS (
   SELECT event_id, ts, user_id, event_type,
-         CAST(round(value * 100, 0) AS BIGINT) AS value_c
+         CAST(round(value * 100, 0) AS BIGINT) AS value_c,
+         timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) AS t_us
   FROM {events}
 )"""
 
@@ -284,26 +295,17 @@ FROM g
 """
 
 
-# The (event_id, user_id, t_us) rows gap_stats and sessionize order per user.
-_EVENTS_US = """
-WITH ev AS (
-  SELECT event_id, user_id,
-         timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) AS t_us
-  FROM {events}
-)"""
-
-
 # Interpolation-feasibility analog: inter-event gaps per user; gaps above the
 # max-interpolation threshold (1h) counted as voids.
-GAP_STATS = _EVENTS_US + """, g AS (
-  SELECT *, t_us - lag(t_us, 1) OVER (PARTITION BY user_id ORDER BY t_us ASC, event_id ASC) AS gap_us
+GAP_STATS = _EVENTS_C + """, g AS (
+  SELECT *, t_us - lag(t_us) OVER (PARTITION BY user_id ORDER BY t_us ASC, event_id ASC) AS gap_us
   FROM ev
 ), agg AS (
   SELECT user_id,
          count(1) AS n_gaps,
          sum(gap_us) AS sum_gap_us,
          max(gap_us) AS max_gap_us,
-         sum(CAST(CASE WHEN gap_us > 3600000000 THEN 1 ELSE 0 END AS BIGINT)) AS n_void
+         sum(CASE WHEN gap_us > 3600000000 THEN 1 ELSE 0 END) AS n_void
   FROM g WHERE gap_us IS NOT NULL
   GROUP BY user_id
 )
@@ -329,11 +331,12 @@ GROUP BY user_id
 
 
 # Sessionization: 30-minute inactivity gap starts a new session; per-user
-# session count / size / duration stats.
-SESSIONIZE = _EVENTS_US + """, flagged AS (
+# session count / size / duration stats.  new_s is BIGINT, the type of the
+# running sum's input column in the Window; an INT flag changes that plan.
+SESSIONIZE = _EVENTS_C + """, flagged AS (
   SELECT *,
-         CAST(CASE WHEN t_us - lag(t_us, 1) OVER w IS NULL
-                     OR t_us - lag(t_us, 1) OVER w > 1800000000 THEN 1 ELSE 0 END AS BIGINT) AS new_s
+         CAST(CASE WHEN t_us - lag(t_us) OVER w IS NULL
+                     OR t_us - lag(t_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS BIGINT) AS new_s
   FROM ev
   WINDOW w AS (PARTITION BY user_id ORDER BY t_us ASC, event_id ASC)
 ), sessed AS (
@@ -382,28 +385,22 @@ FROM per_sess GROUP BY user_id
 
 # Rule-based behavior classification (reference cf_* analog): each event is
 # classified by intensity; per (day, event_type, behavior) confidence stats.
-# Group on a 1-byte behavior code and decode to the label string only on the
-# few grouped output rows (guide 2.3 narrower shuffle key; the CASE mapping is
-# injective so the groups are identical).  Confidence is in basis points: a
-# clipped linear ramp of intensity, exact ints.  Group on the 4-byte DATE and
-# format only the few output rows: avoids a per-row date_format and narrows
-# the shuffle key (guide 1.2 step 2 / 2.3).
+# Confidence is in basis points: a clipped linear ramp of intensity, exact
+# ints.  Group on the DATE and format only the grouped output rows, so the
+# pre-shuffle Project computes no per-row date_format.
 BEHAVIOR_CLASSIFY = _EVENTS_C + """, c AS (
   SELECT to_date(ts) AS day_d, event_type,
-         CAST(CASE WHEN value_c >= 20000 THEN 2 WHEN value_c >= 5000 THEN 1 ELSE 0 END
-              AS TINYINT) AS behavior_c,
-         CAST(least(value_c, 50000) AS BIGINT) AS conf_bp,
+         CASE WHEN value_c >= 20000 THEN 'surge' WHEN value_c >= 5000 THEN 'active'
+              ELSE 'idle' END AS behavior,
+         least(value_c, 50000) AS conf_bp,
          value_c
   FROM ev
 ), g AS (
-  SELECT day_d, event_type, behavior_c, count(1) AS n,
+  SELECT day_d, event_type, behavior, count(1) AS n,
          sum(conf_bp) AS sum_conf_bp, sum(value_c) AS sum_value_c
-  FROM c GROUP BY day_d, event_type, behavior_c
+  FROM c GROUP BY day_d, event_type, behavior
 )
-SELECT date_format(day_d, 'yyyy-MM-dd') AS day, event_type,
-       CASE WHEN behavior_c = 2 THEN 'surge' WHEN behavior_c = 1 THEN 'active'
-            ELSE 'idle' END AS behavior,
-       n,
+SELECT date_format(day_d, 'yyyy-MM-dd') AS day, event_type, behavior, n,
        CAST(sum_conf_bp AS DOUBLE) / CAST(n AS DOUBLE) / 50000.0D AS avg_conf,
        CAST(sum_value_c AS DOUBLE) / CAST(n AS DOUBLE) / 100.0D AS avg_value
 FROM g
@@ -437,11 +434,11 @@ FROM g
 
 # Exclusivity-rule analog: per (user, day) keep only the dominant event type
 # by total intensity (deterministic argmax with tiebreak).  Group on the
-# 4-byte DATE and format only the output rows (guide 2.3).  One scan + one
-# aggregation; the per-(user, day) totals come from window aggregates over the
-# already-established clustering instead of a second aggregation joined back
-# (guide 2.4: share the exchange, avoid the join).  A NULL user_id is one
-# group here and in the oracle (its totals join IS NOT DISTINCT FROM).
+# DATE and format only the output rows, as in BEHAVIOR_CLASSIFY.  The
+# per-(user, day) totals are window aggregates over the row_number window's
+# partitioning instead of a second aggregation joined back, which saves an
+# Exchange and the join.  A NULL user_id is one group here and in the oracle
+# (its totals join IS NOT DISTINCT FROM).
 DOMINANT_BEHAVIOR = _EVENTS_C + """, g AS (
   SELECT user_id, day_d, event_type, sum(value_c) AS sum_c, count(1) AS n
   FROM (SELECT to_date(ts) AS day_d, user_id, event_type, value_c FROM ev)
@@ -452,8 +449,7 @@ DOMINANT_BEHAVIOR = _EVENTS_C + """, g AS (
          sum(sum_c) OVER wall AS tot_c,
          count(1) OVER wall AS n_types
   FROM g
-  WINDOW wall AS (PARTITION BY user_id, day_d
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+  WINDOW wall AS (PARTITION BY user_id, day_d)
 )
 SELECT user_id, date_format(day_d, 'yyyy-MM-dd') AS day, event_type AS dominant_type,
        n_types,
@@ -525,17 +521,17 @@ FROM r
 
 # Exact per-event-type sufficient statistics -> (mu, sigma) doubles, appended
 # to `_EVENTS_C` as the CTE `stats`.  value_c^2 is ~2.5e9 per row, so a BIGINT
-# sum wraps past ~3.7e9 rows per event type (the 100 TB design point is
-# ~1e11-1e12 rows/type): sum the squares as decimal(38,0) (exact int128,
-# mirrors DuckDB's HUGEINT sum).  sum_c itself stays BIGINT: |value_c| <= ~5e4
+# sum wraps past ~3.7e9 rows per event type: sum the squares as decimal(38,0)
+# (DuckDB's HUGEINT sum); as a plain sum it aborts with ARITHMETIC_OVERFLOW on
+# the adversarial `huge` events.  sum_c itself stays BIGINT: |value_c| <= ~5e4
 # keeps it exact to ~2e14 rows/type.  The variance numerator
 # n*sumsq_c - sum_c^2 is computed in decimal(38,0) too (HUGEINT in the
 # oracle), so it is exact and never negative; sigma = sqrt(double of it) / n.
 # The double form sumsq/n - (sum/n)^2 can cancel below zero on near-constant
 # large values (10,000,000.07, .07, .08 give -128), whose sqrt is NaN.  A
-# constant type gets sigma 0, hence the nullif below.  The stats side is <= |event_type|
-# rows by construction, so the queries broadcast it explicitly and the events
-# side is never shuffled at any scale (guide 3.1).
+# constant type gets sigma 0, hence the nullif below.  The stats side has one
+# row per event_type, so the queries broadcast it explicitly and the events
+# side is never shuffled at any scale.
 _TYPE_STATS = """, type_sums AS (
   SELECT event_type, count(1) AS n, sum(value_c) AS sum_c,
          sum(CAST(value_c * value_c AS DECIMAL(38,0))) AS sumsq_c
@@ -564,7 +560,7 @@ _TYPE_STATS_ORACLE = """
 ZSCORE = _EVENTS_C + _TYPE_STATS + """
 SELECT /*+ BROADCAST(s) */ event_id, event_type,
        (CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D) AS z
-FROM ev JOIN (SELECT event_type, mu, sigma FROM stats) s USING (event_type)
+FROM ev JOIN stats s USING (event_type)
 """
 
 ZSCORE_ORACLE = f"""
@@ -583,10 +579,10 @@ FROM c JOIN stats s ON c.event_type = s.event_type
 ANOMALY_USERS = _EVENTS_C + _TYPE_STATS + """, z AS (
   SELECT /*+ BROADCAST(s) */ user_id,
          abs((CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D)) AS abs_z
-  FROM ev JOIN (SELECT event_type, mu, sigma FROM stats) s USING (event_type)
+  FROM ev JOIN stats s USING (event_type)
 ), agg AS (
   SELECT user_id, count(1) AS n,
-         sum(CAST(CASE WHEN abs_z > 2.5D THEN 1 ELSE 0 END AS BIGINT)) AS n_anom,
+         sum(CASE WHEN abs_z > 2.5D THEN 1 ELSE 0 END) AS n_anom,
          max(abs_z) AS max_abs_z
   FROM z GROUP BY user_id
 )
@@ -616,12 +612,12 @@ FROM z GROUP BY user_id
 # Reliability-diagram analog: decile bins of value relative to the per-type
 # max; per (type, bin) count and mean.  max = 0 divides by NULL (DuckDB's x / 0.0),
 # so least(NULL, 9) = bin 9; nullif of the cast would plan one more Project.
+# mx has one row per event_type, so it is broadcast at any scale, like stats.
 RELIABILITY_BINS = _EVENTS_C + """, mx AS (
   SELECT event_type, max(value_c) AS max_c FROM ev GROUP BY event_type
 ), binned AS (
   SELECT /*+ BROADCAST(mx) */ event_type,
-         CAST(least(floor(CAST(value_c AS DOUBLE) * 10.0D / CAST(nullif(max_c, 0) AS DOUBLE)), 9)
-              AS BIGINT) AS bin,
+         least(floor(CAST(value_c AS DOUBLE) * 10.0D / CAST(nullif(max_c, 0) AS DOUBLE)), 9) AS bin,
          value_c
   FROM ev JOIN mx USING (event_type)
 ), g AS (
@@ -652,15 +648,17 @@ FROM binned GROUP BY 1, 2
 # MAE-evaluation analog: per event type, mean absolute deviation of values
 # from the type mean, computed in exact integer arithmetic.  Each absdev term
 # is ~value_c*n_type (~5e15 at 1e11 rows/type, still a valid BIGINT), but
-# their per-type sum grows ~n^2 and wraps int64 past ~sf200 (ADVICE):
-# accumulate as decimal(38,0), which is exact to ~1e38 and mirrors DuckDB's
-# HUGEINT sum of BIGINT absdev.
+# their per-type sum grows ~n^2 and wraps int64 past ~sf200: accumulate as
+# decimal(38,0), as DuckDB's HUGEINT sum of BIGINT absdev does.  No
+# adversarial row exposes it: value_c must stay <= 3.03e9 for stats' BIGINT
+# value_c^2, so the sum passes int64 only from ~55,000 rows of one type
+# (3e9 * n^2 > 9.2e18).
 MAE_EVAL = _EVENTS_C + _TYPE_STATS + """, g AS (
   SELECT /*+ BROADCAST(s) */ event_type,
          max(n_type) AS n,
          max(sum_c) AS sum_c,
          sum(CAST(abs(value_c * n_type - sum_c) AS DECIMAL(38,0))) AS sum_absdev
-  FROM ev JOIN (SELECT event_type, n_type, sum_c FROM stats) s USING (event_type)
+  FROM ev JOIN stats s USING (event_type)
   GROUP BY event_type
 )
 SELECT event_type, n,
@@ -696,8 +694,8 @@ FROM j GROUP BY event_type
 # the normalized text; keep the smallest doc_id per cluster.
 # Only the first 8 tokens matter, so extract just that prefix (the anchored
 # greedy regex stops scanning after the 8th token) instead of normalizing,
-# splitting and materializing a token array for the whole document (guide 1.2
-# step 2: per-task work; same fingerprint, O(prefix) not O(doc)).
+# splitting and materializing a token array for the whole document: same
+# fingerprint, O(prefix) per row, not O(doc).
 # Normalization is an ASCII case fold (translate A-Z -> a-z) and whitespace
 # is Java's regex \s, [ \t\n\x0B\f\r]; the oracle writes that class out,
 # because RE2's \s lacks \x0B.  No Unicode case mapping is bit-identical in
@@ -705,30 +703,23 @@ FROM j GROUP BY event_type
 # U+0020-U+2FFFF (final sigma, dotted capital I, and 140 from their different
 # Unicode versions), so non-ASCII capitals keep their case on both sides.  The
 # fold maps one code point to one and never touches whitespace, so it runs on
-# the extracted prefix only, which keeps the r10 prefix-only lowercasing win
+# the extracted prefix only, which keeps the prefix-only lowercasing win
 # (1.45x on 2.7 KB docs, OPTIMIZATION_r10.md).  The `documents` rows of
 # tests/test_queries.py's ADVERSARIAL dataset cover these edges.
-# Shuffle the 16-byte binary digest, not the 32-char hex string, and re-hex
-# only the grouped output rows (guide 2.3 "narrower types" -- the group key is
-# most of each shuffled row here).  lower(hex(unhex(h))) is the identity on
-# md5's lowercase-hex output, so the emitted fingerprint is byte-identical.
 DEDUP_DOCS = r"""
 WITH d AS (
   SELECT doc_id,
-         unhex(md5(array_join(sort_array(filter(
+         md5(array_join(sort_array(filter(
              split(translate(regexp_extract(text, '^\\s*(?:\\S+\\s+){{0,7}}\\S*', 0),
                              'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
                    '\\s+'),
-             x -> x != '')), ' '))) AS fp_bin,
+             x -> x != '')), ' ')) AS fingerprint,
          n_chars
   FROM {documents}
-), g AS (
-  SELECT fp_bin, min(doc_id) AS survivor_id, count(1) AS cluster_size,
-         sum(n_chars) AS total_chars
-  FROM d GROUP BY fp_bin
 )
-SELECT lower(hex(fp_bin)) AS fingerprint, survivor_id, cluster_size, total_chars
-FROM g
+SELECT fingerprint, min(doc_id) AS survivor_id, count(1) AS cluster_size,
+       sum(n_chars) AS total_chars
+FROM d GROUP BY fingerprint
 """
 
 DEDUP_DOCS_ORACLE = """
@@ -750,7 +741,7 @@ FROM d GROUP BY fingerprint
 
 # Text-pipeline stats: per (lang, source) token and char counts.
 # size(split(text, ' ')) == #spaces + 1; count spaces with a char scan instead
-# of materializing a token array per document (guide 1.2 step 2).
+# of materializing a token array per document.
 DOC_TOKEN_STATS = """
 WITH d AS (
   SELECT lang, source,
@@ -789,17 +780,17 @@ def _dot(a: str, b: str) -> str:
 
 # Vector similarity search: top-5 nearest embeddings (cosine) to each label's
 # anchor vector (the lowest vec_id of that label).
-# Anchor selection is a two-step hash path (r10): (1) min(vec_id) per label
-# over the parquet-pruned narrow (vec_id, label) columns -- a pure
-# HashAggregate -- then (2) fetch the anchor rows by broadcast-probing the
-# table on vec_id == anchor_id.  The r09 one-step min/min_by aggregation kept
-# a var-length array in the aggregation buffer, which forces SortAggregate:
-# every task fully sorts its slice of the table by label (O(n log n) on
-# ~270-byte rows, spill-prone at scale).  The hash path never sorts and never
-# holds big rows in an aggregation buffer; the extra scan reads only the two
-# narrow columns (guide 2.3 "shuffle keys and metadata instead of payloads",
-# 1.2 step 1).  vec_id is unique, so the fetch returns exactly the min_by row
-# per label.
+# Anchor selection is a two-step hash path: (1) min(vec_id) per label over
+# the parquet-pruned narrow (vec_id, label) columns -- a pure HashAggregate --
+# then (2) fetch the anchor rows by broadcast-probing the table on
+# vec_id == anchor_id.  A one-step min/min_by aggregation keeps a var-length
+# array in the aggregation buffer, which forces SortAggregate: every task
+# fully sorts its slice of the table by label (O(n log n) on ~270-byte rows,
+# spill-prone at scale).  The hash path never sorts and never holds big rows
+# in an aggregation buffer; the extra scan reads only the two narrow columns.
+# vec_id is unique, so the fetch returns exactly the min_by row per label.
+# The fetch selects only anchor_id from anchor_ids: with its `label` too, the
+# unqualified `label` is an AMBIGUOUS_REFERENCE.
 # A zero vector (or a zero anchor) has norm 0: try_divide makes its sim NULL,
 # as DuckDB's x / 0.0 does, instead of ANSI's DIVIDE_BY_ZERO, and both
 # rankings put NULL sims last.  (nullif on the non-column denominator would
@@ -812,13 +803,11 @@ def _dot(a: str, b: str) -> str:
 SIMILARITY_TOPK = f"""
 WITH anchor_ids AS (
   SELECT label, min(vec_id) AS anchor_id
-  FROM (SELECT vec_id, label FROM {{embeddings}}) GROUP BY label
-), fetched AS (
-  SELECT /*+ BROADCAST(a) */ label, anchor_id, embedding AS anchor_vec
-  FROM {{embeddings}} e JOIN (SELECT anchor_id FROM anchor_ids) a ON e.vec_id = a.anchor_id
+  FROM {{embeddings}} GROUP BY label
 ), anchors AS (
-  SELECT label, anchor_id, anchor_vec, sqrt({_dot("anchor_vec", "anchor_vec")}) AS anchor_norm
-  FROM fetched
+  SELECT /*+ BROADCAST(a) */ label, anchor_id, embedding AS anchor_vec,
+         sqrt({_dot("embedding", "embedding")}) AS anchor_norm
+  FROM {{embeddings}} JOIN (SELECT anchor_id FROM anchor_ids) a ON vec_id = anchor_id
 ), scored AS (
   SELECT /*+ BROADCAST(a) */ label, vec_id, anchor_id,
          try_divide({_dot("embedding", "anchor_vec")},

@@ -70,5 +70,7 @@ def run_to_memory(df: DataFrame, mode: str = "append") -> str:
 
 
 def run_aggregation_to_memory(df: DataFrame) -> str:
-    """run_to_memory in complete mode, for aggregations."""
+    """run_to_memory in complete mode, for aggregations.  perfbench/run.py is
+    its only caller; the next benchmark change (ROADMAP item 3) switches that
+    to run_to_memory(df, "complete") and deletes this."""
     return run_to_memory(df, mode="complete")

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -18,3 +19,20 @@ def spark():
     spark = build_session(4, SF_SMOKE, app_name="tests")
     yield spark
     spark.stop()
+
+
+@contextmanager
+def spark_conf(spark, confs):
+    """Set the Spark confs `confs` ({key: value}) for the with-block, then
+    restore each one's old value, or unset it if it had none."""
+    old = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

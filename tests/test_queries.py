@@ -25,11 +25,19 @@ from tests.conftest import SF_DIRS, SF_SMOKE
 # below 2^64); and one (X, F) row whose odd charge sum lies above 2^53, where
 # the cast to double rounds.  Their order and part keys match no order or
 # part, so they drop out of the joins.
+# Two (Y, O) rows whose discounted products price_c * 100 are 9e18 each, so
+# pricing_summary's discounted sum passes int64; l_tax -0.99 makes the charge
+# factor 1, so every per-row product stays inside int64.  They sit on parts
+# 2 and 12, both PROMO, so part_type_revenue's per-type revenue passes int64
+# while each per-part sum stays inside it, and each has its own order key,
+# which matches no order.
 LINEITEM = [
     (1_000_001, 1_000_001, 1, 1, 1.0, 9e12, 0.0, 0.0, "X", "O", "1999-01-01 00:00:00"),
     (1_000_001, 1_000_002, 1, 2, 1.0, 9e12, 0.0, 0.0, "X", "O", "1999-01-01 00:00:00"),
     (1_000_002, 1_000_003, 1, 1, 1.0, 12_345_678_901.23, 0.07, 0.05, "X", "F",
      "1999-01-01 00:00:00"),
+    (1_000_003, 2, 1, 1, 1.0, 9e14, 0.0, -0.99, "Y", "O", "1999-01-01 00:00:00"),
+    (1_000_004, 12, 1, 1, 1.0, 9e14, 0.0, -0.99, "Y", "O", "1999-01-01 00:00:00"),
 ]
 
 # events: a type whose values are constant (sigma = 0), a type whose values

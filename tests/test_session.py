@@ -6,7 +6,7 @@ from contextlib import redirect_stdout
 from engine.queries import QUERIES
 from engine.session import shuffle_partitions
 from engine.tables import load
-from tests.conftest import SF_DIRS, SF_SMOKE
+from tests.conftest import SF_DIRS, SF_SMOKE, spark_conf
 
 
 def _compiled_classes(spark) -> int:
@@ -79,10 +79,7 @@ def test_aqe_picks_shuffled_hash_join(spark):
     AQE turns it into a shuffled hash join because every post-shuffle
     partition's build side is under maxShuffledHashJoinLocalMapThreshold.
     This is the join the engine runs once a side is too big to broadcast."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "-1")
+    with spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = spark.sql(
             "SELECT o.o_orderkey, l.l_quantity FROM {o} o JOIN {l} l"
             " ON o.o_orderkey = l.l_orderkey",
@@ -91,11 +88,6 @@ def test_aqe_picks_shuffled_hash_join(spark):
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     plan = buf.getvalue()
     final = plan[plan.index("== Final Plan =="):plan.index("== Initial Plan ==")]
     assert "ShuffledHashJoin" in final and "SortMergeJoin" not in final, plan

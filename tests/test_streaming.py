@@ -8,11 +8,12 @@ from datetime import datetime, timedelta, timezone
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from engine import streaming
 from engine.oracle import compare
 from engine.tables import path
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_conf
 
 
 def _write_events(path, keys, n):
@@ -32,8 +33,8 @@ def test_windowed_counts_matches_batch(spark):
     """The streamed 6-hour counts and cent sums equal DuckDB's batch
     aggregate of the events file."""
     window_us = 6 * 3_600_000_000
-    table = streaming.run_aggregation_to_memory(
-        streaming.windowed_counts(streaming.read_event_stream(spark, SF_SMOKE)))
+    table = streaming.run_to_memory(
+        streaming.windowed_counts(streaming.read_event_stream(spark, SF_SMOKE)), "complete")
     with duckdb.connect() as con:
         assert compare(
             spark.table(table).selectExpr("unix_micros(w_start) AS w_start_us",
@@ -53,11 +54,26 @@ def test_stream_dedup(spark):
     assert n == n_batch  # event_ids are unique -> dedup is a no-op pass-through
 
 
-def test_stream_dedup_drops_repeated_keys(spark, tmp_path):
+# The state-store providers stream_dedup must work with: Spark's default,
+# and RocksDB with changelog checkpointing, which a deployment selects with
+# Spark's own `--conf` or spark-defaults.conf.  Changelog uploads go through
+# the session's checkpoint file manager.
+STATE_STORES = {
+    "default": {},
+    "rocksdb": {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    },
+}
+
+
+@pytest.mark.parametrize("store", sorted(STATE_STORES))
+def test_stream_dedup_drops_repeated_keys(spark, tmp_path, store):
     """Rows that repeat an (event_id, ts) key are dropped, within a file and
-    across micro-batches; a row that shares only its id or only its ts is
-    kept.  All timestamps lie within 80 s, so no row is behind the 1 hour
-    watermark and every drop is a duplicate."""
+    across micro-batches, with each state-store provider; a row that shares
+    only its id or only its ts is kept.  All timestamps lie within 80 s, so
+    no row is behind the 1 hour watermark and every drop is a duplicate."""
     base = datetime(2024, 6, 1, 12, 0, tzinfo=timezone.utc)
     unique = [(i, base + timedelta(seconds=i)) for i in range(80)]
     repeats = unique[:10] + unique[40:43]  # 13 duplicates
@@ -71,8 +87,9 @@ def test_stream_dedup_drops_repeated_keys(spark, tmp_path):
     for n, rows in enumerate(files):
         _write_events(tmp_path / f"events_{n}.parquet", rows, n)
 
-    stream = streaming.read_event_stream(spark, str(tmp_path))
-    table = streaming.run_to_memory(streaming.stream_dedup(stream))
+    with spark_conf(spark, STATE_STORES[store]):
+        stream = streaming.read_event_stream(spark, str(tmp_path))
+        table = streaming.run_to_memory(streaming.stream_dedup(stream))
     got = [(r.event_id, r.ts) for r in spark.table(table).collect()]
     assert len(got) == len(keys) - len(repeats)
     assert len(set(got)) == len(got)
@@ -102,33 +119,6 @@ def test_stream_dedup_drops_late_rows(spark, tmp_path):
     table = streaming.run_to_memory(streaming.stream_dedup(stream))
     got = sorted(r.event_id for r in spark.table(table).collect())
     assert got == sorted(i for i, _ in on_time + recent)
-
-
-def test_stream_dedup_rocksdb_statestore(spark):
-    """The production state-store config (r10): stream_dedup must produce the
-    same result with the RocksDB provider and changelog checkpointing, which
-    a deployment selects with Spark's own `--conf` or spark-defaults.conf.
-    Changelog uploads go through the session's checkpoint file manager."""
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    }
-    old = {key: spark.conf.get(key, None) for key in confs}
-    try:
-        for key, value in confs.items():
-            spark.conf.set(key, value)
-        stream = streaming.read_event_stream(spark, SF_SMOKE)
-        table = streaming.run_to_memory(streaming.stream_dedup(stream))
-        n = spark.table(table).count()
-    finally:
-        for key, value in old.items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
-    n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
-    assert n == n_batch
 
 
 def test_stream_checkpoint_forks_no_readlink(spark, tmp_path):
