@@ -15,14 +15,15 @@ Writing the texts:
 * The texts go through Python's string formatter, so literal braces are
   doubled (a regex `{{0,7}}`).  Spark SQL unescapes backslashes in string
   literals, so the regex `\s+` is written `'\\s+'` (in a raw Python string).
-* A Spark text departs from its oracle's direct form only to change a plan
-  (an Exchange, sort or join it removes, or a broadcast at scale) or an
-  answer (an adversarial row of tests/test_queries.py that the direct form
-  gets wrong), and its comment names which.  The plan gate tells the two
-  kinds apart from text the optimizer erases: `tools/dump_plans.py` writes
-  normalized plans that diff directly against another checkout's, so a
-  construct whose removal leaves the dumps at sf0.001 and sf0.1 identical
-  changes no plan.
+* A Spark text departs from its oracle's direct form only for an answer
+  (an adversarial row of tests/test_queries.py that the direct form gets
+  wrong) or for a plan change that a warm per-query probe measures as
+  faster (one `build_session(4, sf_dir)`, 3 warm-up and 15 alternating
+  rounds of both forms to the noop sink, wall-clock medians at sf0.001 and
+  sf0.1), and its comment names which.  Spark's size-based planner and AQE
+  pick every join; the texts carry no join hints.  The plan gate,
+  `tools/dump_plans.py <out_dir> <sf_dir>` in two checkouts and `diff -r`,
+  is empty at sf0.001 and sf0.1 for a construct that changes no plan.
 
 Numerical discipline (so the DuckDB oracle value-hash matches bit-for-bit):
 
@@ -529,9 +530,7 @@ FROM r
 # oracle), so it is exact and never negative; sigma = sqrt(double of it) / n.
 # The double form sumsq/n - (sum/n)^2 can cancel below zero on near-constant
 # large values (10,000,000.07, .07, .08 give -128), whose sqrt is NaN.  A
-# constant type gets sigma 0, hence the nullif below.  The stats side has one
-# row per event_type, so the queries broadcast it explicitly and the events
-# side is never shuffled at any scale.
+# constant type gets sigma 0, hence the nullif below.
 _TYPE_STATS = """, type_sums AS (
   SELECT event_type, count(1) AS n, sum(value_c) AS sum_c,
          sum(CAST(value_c * value_c AS DECIMAL(38,0))) AS sumsq_c
@@ -558,9 +557,9 @@ _TYPE_STATS_ORACLE = """
 # Feature normalization analog: per-event z-score against per-type stats;
 # sigma = 0 gives a NULL z, as DuckDB's x / 0.0 does, not ANSI's DIVIDE_BY_ZERO.
 ZSCORE = _EVENTS_C + _TYPE_STATS + """
-SELECT /*+ BROADCAST(s) */ event_id, event_type,
+SELECT event_id, event_type,
        (CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D) AS z
-FROM ev JOIN stats s USING (event_type)
+FROM ev JOIN stats USING (event_type)
 """
 
 ZSCORE_ORACLE = f"""
@@ -577,9 +576,9 @@ FROM c JOIN stats s ON c.event_type = s.event_type
 # Anomaly-score analog: per user, rate of events with |z| > 2.5 and the worst
 # deviation (sigma = 0 gives a NULL |z|, as in ZSCORE).
 ANOMALY_USERS = _EVENTS_C + _TYPE_STATS + """, z AS (
-  SELECT /*+ BROADCAST(s) */ user_id,
+  SELECT user_id,
          abs((CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D)) AS abs_z
-  FROM ev JOIN stats s USING (event_type)
+  FROM ev JOIN stats USING (event_type)
 ), agg AS (
   SELECT user_id, count(1) AS n,
          sum(CASE WHEN abs_z > 2.5D THEN 1 ELSE 0 END) AS n_anom,
@@ -612,11 +611,10 @@ FROM z GROUP BY user_id
 # Reliability-diagram analog: decile bins of value relative to the per-type
 # max; per (type, bin) count and mean.  max = 0 divides by NULL (DuckDB's x / 0.0),
 # so least(NULL, 9) = bin 9; nullif of the cast would plan one more Project.
-# mx has one row per event_type, so it is broadcast at any scale, like stats.
 RELIABILITY_BINS = _EVENTS_C + """, mx AS (
   SELECT event_type, max(value_c) AS max_c FROM ev GROUP BY event_type
 ), binned AS (
-  SELECT /*+ BROADCAST(mx) */ event_type,
+  SELECT event_type,
          least(floor(CAST(value_c AS DOUBLE) * 10.0D / CAST(nullif(max_c, 0) AS DOUBLE)), 9) AS bin,
          value_c
   FROM ev JOIN mx USING (event_type)
@@ -649,16 +647,14 @@ FROM binned GROUP BY 1, 2
 # from the type mean, computed in exact integer arithmetic.  Each absdev term
 # is ~value_c*n_type (~5e15 at 1e11 rows/type, still a valid BIGINT), but
 # their per-type sum grows ~n^2 and wraps int64 past ~sf200: accumulate as
-# decimal(38,0), as DuckDB's HUGEINT sum of BIGINT absdev does.  No
-# adversarial row exposes it: value_c must stay <= 3.03e9 for stats' BIGINT
-# value_c^2, so the sum passes int64 only from ~55,000 rows of one type
-# (3e9 * n^2 > 9.2e18).
+# decimal(38,0), as DuckDB's HUGEINT sum of BIGINT absdev does; as a plain
+# sum it aborts with ARITHMETIC_OVERFLOW on the adversarial `wide` events.
 MAE_EVAL = _EVENTS_C + _TYPE_STATS + """, g AS (
-  SELECT /*+ BROADCAST(s) */ event_type,
+  SELECT event_type,
          max(n_type) AS n,
          max(sum_c) AS sum_c,
          sum(CAST(abs(value_c * n_type - sum_c) AS DECIMAL(38,0))) AS sum_absdev
-  FROM ev JOIN stats s USING (event_type)
+  FROM ev JOIN stats USING (event_type)
   GROUP BY event_type
 )
 SELECT event_type, n,
@@ -740,12 +736,10 @@ FROM d GROUP BY fingerprint
 
 
 # Text-pipeline stats: per (lang, source) token and char counts.
-# size(split(text, ' ')) == #spaces + 1; count spaces with a char scan instead
-# of materializing a token array per document.
 DOC_TOKEN_STATS = """
 WITH d AS (
   SELECT lang, source,
-         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS n_tokens,
+         CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens,
          n_chars
   FROM {documents}
 ), g AS (
@@ -782,7 +776,7 @@ def _dot(a: str, b: str) -> str:
 # anchor vector (the lowest vec_id of that label).
 # Anchor selection is a two-step hash path: (1) min(vec_id) per label over
 # the parquet-pruned narrow (vec_id, label) columns -- a pure HashAggregate --
-# then (2) fetch the anchor rows by broadcast-probing the table on
+# then (2) fetch the anchor rows by probing the table with a hash join on
 # vec_id == anchor_id.  A one-step min/min_by aggregation keeps a var-length
 # array in the aggregation buffer, which forces SortAggregate: every task
 # fully sorts its slice of the table by label (O(n log n) on ~270-byte rows,
@@ -795,24 +789,19 @@ def _dot(a: str, b: str) -> str:
 # as DuckDB's x / 0.0 does, instead of ANSI's DIVIDE_BY_ZERO, and both
 # rankings put NULL sims last.  (nullif on the non-column denominator would
 # plan one more Project.)
-# Cardinality bound for the broadcasts: anchor_ids / anchors have exactly one
-# row per distinct `label`, and label is a small enum in this schema (tens of
-# values; ~1.7 KB per anchor row with the 64-double vector).  The hints are
-# safe up to ~10^5-10^6 labels; a high-cardinality label column would need the
-# broadcasts dropped in favor of shuffled joins.
 SIMILARITY_TOPK = f"""
 WITH anchor_ids AS (
   SELECT label, min(vec_id) AS anchor_id
   FROM {{embeddings}} GROUP BY label
 ), anchors AS (
-  SELECT /*+ BROADCAST(a) */ label, anchor_id, embedding AS anchor_vec,
+  SELECT label, anchor_id, embedding AS anchor_vec,
          sqrt({_dot("embedding", "embedding")}) AS anchor_norm
-  FROM {{embeddings}} JOIN (SELECT anchor_id FROM anchor_ids) a ON vec_id = anchor_id
+  FROM {{embeddings}} JOIN (SELECT anchor_id FROM anchor_ids) ON vec_id = anchor_id
 ), scored AS (
-  SELECT /*+ BROADCAST(a) */ label, vec_id, anchor_id,
+  SELECT label, vec_id, anchor_id,
          try_divide({_dot("embedding", "anchor_vec")},
                     sqrt({_dot("embedding", "embedding")}) * anchor_norm) AS sim
-  FROM {{embeddings}} JOIN anchors a USING (label)
+  FROM {{embeddings}} JOIN anchors USING (label)
   WHERE vec_id != anchor_id
 ), ranked AS (
   SELECT *, row_number() OVER (PARTITION BY label ORDER BY sim DESC NULLS LAST, vec_id ASC)

@@ -51,7 +51,7 @@ def build_session(cpus: int, sf_dir: str, app_name: str = "engine"):
         # default advisory post-shuffle partition size (AQE coalesces
         # partitions toward it, so a qualifying build side is ~one partition).
         # Inert at local SFs where these joins are broadcast anyway; pinned by
-        # tests/test_session.py::test_aqe_picks_shuffled_hash_join.
+        # tests/test_queries.py::test_oracle_parity_shuffled.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # Compiled-class cache for generated code (static conf, so it must be
         # set before the session starts).  The 17 batch queries generate ~200

@@ -16,7 +16,7 @@ import pytest
 from engine.oracle import canon, compare, views
 from engine.queries import QUERIES
 from engine.tables import path
-from tests.conftest import SF_DIRS, SF_SMOKE
+from tests.conftest import SF_DIRS, SF_SMOKE, spark_conf
 
 # Rows appended to sf0.001's tables, each table's rows in its column order.
 #
@@ -59,6 +59,17 @@ EVENTS = (
     + [(10_019 + i, f"2024-01-20 12:0{i}:00", i, "huge", v, None)
        for i, v in enumerate((30_000_000.0, 29_000_000.0))]
 )
+
+# A `wide` events type of 60,000 rows, generated in DuckDB (executemany
+# inserts them one statement at a time, about 25 s on 4 vCPUs):
+# value_c alternates ∓3e9, so value_c² = 9e18 fits int64 and sum_c = 0, while
+# mae_eval's absdev terms are 3e9·n each and sum to 3e9·n² = 1.08e19, past
+# int64 and below 2^64.  600 users, one event a minute: 100 rows per user.
+GENERATED = {"events": """
+SELECT 20000 + i, TIMESTAMP '2024-02-01 00:00:00' + i * INTERVAL 1 MINUTE, 20000 + i % 600,
+       'wide', CASE WHEN i % 2 = 0 THEN -30000000.0 ELSE 30000000.0 END, NULL
+FROM range(60000) t(i)
+"""}
 
 # documents (lang `xx`, one `source` per text so doc_token_stats compares
 # each text's token count on its own): empty and whitespace-only texts, token
@@ -122,7 +133,7 @@ ADVERSARIAL = {"lineitem": LINEITEM, "events": EVENTS, "documents": DOCUMENTS,
 def dataset(tmp_path_factory):
     """dataset(name) -> (sf_dir, DuckDB connection over it), built once per
     name: a generated scale-factor dir as is, or `adversarial`, a copy of
-    sf0.001 whose tables carry the ADVERSARIAL rows."""
+    sf0.001 whose tables carry the ADVERSARIAL and GENERATED rows."""
     built = {}
 
     def get(name):
@@ -136,6 +147,8 @@ def dataset(tmp_path_factory):
                         w.execute(f"CREATE TABLE {table} AS FROM '{path(SF_SMOKE, table)}'")
                         w.executemany(
                             f"INSERT INTO {table} VALUES ({', '.join('?' * len(rows[0]))})", rows)
+                        if table in GENERATED:
+                            w.execute(f"INSERT INTO {table} {GENERATED[table]}")
                         w.execute(f"COPY {table} TO '{path(sf_dir, table)}' (FORMAT parquet)")
             con = duckdb.connect()
             views(con, sf_dir)
@@ -148,9 +161,12 @@ def dataset(tmp_path_factory):
 
 
 def check_parity(spark, dataset, name):
+    """Assert the oracle's answer; return the executed DataFrame."""
     sf_dir, con = dataset
     q = QUERIES[name]
-    assert compare(q.fn(spark, sf_dir), con.sql(q.oracle)) == []
+    df = q.fn(spark, sf_dir)
+    assert compare(df, con.sql(q.oracle)) == []
+    return df
 
 
 # sf0.001's cases keep the bare query name as their id; the larger scale
@@ -165,6 +181,19 @@ def test_oracle_parity(spark, dataset, sf_dir, name):
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_oracle_parity_adversarial(spark, dataset, name):
     check_parity(spark, dataset("adversarial"), name)
+
+
+@pytest.mark.parametrize("name", sorted(n for n, q in QUERIES.items() if "JOIN" in q.sql))
+def test_oracle_parity_shuffled(spark, dataset, name):
+    """The plan once no join side is small enough to broadcast: every join
+    still gives the oracle's answer, and AQE runs each one as a shuffled hash
+    join (engine/session.py's maxShuffledHashJoinLocalMapThreshold)."""
+    with spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        df = check_parity(spark, dataset("adversarial"), name)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan[plan.index("== Final Plan =="):plan.index("== Initial Plan ==")]
+    assert "ShuffledHashJoin" in final, plan
+    assert "SortMergeJoin" not in final and "BroadcastHashJoin" not in final, plan
 
 
 def test_null_nan_signed_zero_and_mixed_types_sort_exactly():

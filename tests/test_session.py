@@ -1,12 +1,8 @@
 """Session configuration that the whole engine relies on."""
 
-import io
-from contextlib import redirect_stdout
-
 from engine.queries import QUERIES
 from engine.session import shuffle_partitions
-from engine.tables import load
-from tests.conftest import SF_DIRS, SF_SMOKE, spark_conf
+from tests.conftest import SF_DIRS, SF_SMOKE
 
 
 def _compiled_classes(spark) -> int:
@@ -73,21 +69,3 @@ def test_shuffle_partitions_follow_cores_and_input(tmp_path):
     assert shuffle_partitions(4, SF_DIRS[-1]) == 4
     assert shuffle_partitions(1, SF_SMOKE) == 2
 
-
-def test_aqe_picks_shuffled_hash_join(spark):
-    """With broadcasts off, an equi-join is planned as a sort-merge join, and
-    AQE turns it into a shuffled hash join because every post-shuffle
-    partition's build side is under maxShuffledHashJoinLocalMapThreshold.
-    This is the join the engine runs once a side is too big to broadcast."""
-    with spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
-        df = spark.sql(
-            "SELECT o.o_orderkey, l.l_quantity FROM {o} o JOIN {l} l"
-            " ON o.o_orderkey = l.l_orderkey",
-            o=load(spark, SF_SMOKE, "orders"), l=load(spark, SF_SMOKE, "lineitem"))
-        assert df.collect()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain()
-    plan = buf.getvalue()
-    final = plan[plan.index("== Final Plan =="):plan.index("== Initial Plan ==")]
-    assert "ShuffledHashJoin" in final and "SortMergeJoin" not in final, plan

@@ -1,7 +1,7 @@
 """Dump .explain('formatted') for every declared query.
 
-Usage: python tools/dump_plans.py <suffix> [sf_dir] [query ...]
-Writes $PLANS_DIR/<query>_<suffix>.txt (PLANS_DIR defaults to the repo's plans/)
+Usage: python tools/dump_plans.py <out_dir> <sf_dir> [query ...]
+Writes <out_dir>/<query>.txt (all declared queries when none are named).
 
 The dumps are normalized so that two checkouts' plans diff directly
 (`diff -r dir_a dir_b` is empty when the plans are the same): expression ids
@@ -40,20 +40,19 @@ def normalize(plan: str) -> str:
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3:] or list(QUERIES)
-    plans_dir = os.environ.get("PLANS_DIR", os.path.join(ROOT, "plans"))
-    os.makedirs(plans_dir, exist_ok=True)
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    out_dir, sf_dir, *names = sys.argv[1:]
+    os.makedirs(out_dir, exist_ok=True)
     spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                          sf_dir=sf_dir, app_name=f"plans-{suffix}")
-    for name in names:
+                          sf_dir=sf_dir, app_name="plans")
+    for name in names or QUERIES:
         df = QUERIES[name].fn(spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         txt = normalize(buf.getvalue())
-        with open(f"{plans_dir}/{name}_{suffix}.txt", "w") as f:
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(txt)
         n_exch = txt.count("Exchange")
         joins = [k for k in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
