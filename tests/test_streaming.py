@@ -46,6 +46,14 @@ def test_windowed_counts_matches_batch(spark):
                 FROM '{path(SF_SMOKE, "events")}' GROUP BY 1, 2""")) == []
 
 
+def test_stream_dedup(spark):
+    stream = streaming.read_event_stream(spark, SF_SMOKE)
+    table = streaming.run_to_memory(streaming.stream_dedup(stream))
+    n = spark.table(table).count()
+    n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    assert n == n_batch  # event_ids are unique -> dedup is a no-op pass-through
+
+
 # The state-store providers stream_dedup must work with: Spark's default,
 # and RocksDB with changelog checkpointing, which a deployment selects with
 # Spark's own `--conf` or spark-defaults.conf.  Changelog uploads go through
@@ -114,29 +122,27 @@ def test_stream_dedup_drops_late_rows(spark, tmp_path):
 
 
 def test_stream_checkpoint_forks_no_readlink(spark, tmp_path):
-    """A stream_dedup drain of sf0.001's events passes every row through
-    (their event_ids are unique) and spawns no `readlink` process.  Spark's
-    default FileContext checkpoint manager forks `readlink` four times per
-    rename on a host without libhadoop; engine.session selects the
-    FileSystem manager, which renames in-process.  Counted with a JFR
-    jdk.ProcessStart recording in the session's JVM."""
+    """A stream_dedup drain spawns no `readlink` process.  Spark's default
+    FileContext checkpoint manager forks `readlink` four times per rename on
+    a host without libhadoop; engine.session selects the FileSystem manager,
+    which renames in-process.  Counted with a JFR jdk.ProcessStart recording
+    in the session's JVM."""
     jvm = spark._jvm
     recording = jvm.jdk.jfr.Recording()
     recording.enable("jdk.ProcessStart")
     recording.start()
     try:
         stream = streaming.read_event_stream(spark, SF_SMOKE)
-        table = streaming.run_to_memory(streaming.stream_dedup(stream))
+        streaming.run_to_memory(streaming.stream_dedup(stream))
     finally:
         recording.stop()
     # java.nio.file.Paths.get is varargs, which py4j cannot call.
-    jfr = jvm.java.io.File(str(tmp_path / "spawns.jfr")).toPath()
-    recording.dump(jfr)
+    path = jvm.java.io.File(str(tmp_path / "spawns.jfr")).toPath()
+    recording.dump(path)
     recording.close()
     spawned = Counter(str(e.getString("command")).split()[0]
-                      for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(jfr))
+                      for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path))
     assert spawned["readlink"] == 0, dict(spawned)
-    assert spark.table(table).count() == spark.read.parquet(path(SF_SMOKE, "events")).count()
 
 
 def test_stream_dedup_restarts_from_checkpoint(spark, tmp_path):
