@@ -52,7 +52,9 @@ def main() -> None:
     # write+read, long+decimal hash agg, broadcast join, window, noop).
     # Keeping the r09 warmup keeps BENCH_r{N} numbers comparable across
     # rounds; the known caveat (it pre-reads lineitem metadata used by three
-    # timed queries) is disclosed, round-invariant, and applied uniformly.
+    # timed queries, and registers the session's `lineitem` view, which
+    # engine.tables.load then reuses for them) is disclosed, round-invariant,
+    # and applied uniformly.
     sc = spark.sparkContext
     sc.setJobDescription("warmup")
     QUERIES["pricing_summary"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -1,12 +1,12 @@
 r"""Declared queries: Spark SQL texts and their DuckDB oracle SQL.
 
 Each query is one Spark SQL statement whose `{table}` placeholders name the
-tables it reads.  `Query.fn` loads each named table once (through the
-module-level `load`) and passes it to `spark.sql(text, table=df, ...)`, so
-the whole query is parsed and analyzed once, in one call, instead of one
-analyzer run and several py4j round trips per DataFrame step.  PySpark
-registers each table under a uuid view name for the call and drops it
-afterwards, so queries built concurrently in one session never collide.
+tables it reads.  `Query.fn` looks each named table up once (through the
+module-level `load`, which returns the table's temp view, registered once per
+session) and substitutes the view names into the text, so the whole query is
+one `spark.sql` call, parsed and analyzed once, with no view created or
+dropped per build.  The view registry is per session and locked, so queries
+built concurrently in one session share the views safely.
 
 Writing the texts:
 
@@ -58,9 +58,13 @@ class Query:
     sql: str  # Spark SQL; each `{name}` placeholder is the table `name`
     oracle: str  # DuckDB SQL over pre-registered views
 
+    @property
+    def tables(self) -> tuple[str, ...]:
+        """The tables the text names, each once, in order of first use."""
+        return tuple(dict.fromkeys(f for _, f, _, _ in Formatter().parse(self.sql) if f))
+
     def fn(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        tables = dict.fromkeys(f for _, f, _, _ in Formatter().parse(self.sql) if f)
-        return spark.sql(self.sql, **{t: load(spark, sf_dir, t) for t in tables})
+        return spark.sql(self.sql.format(**{t: load(spark, sf_dir, t) for t in self.tables}))
 
 
 # ---------------------------------------------------------------------------

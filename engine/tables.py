@@ -11,14 +11,28 @@ Timestamps are declared `timestamp_ntz`: every column reads as the stored UTC
 wall clock whatever the session timezone, also from a file whose column is
 annotated as an instant (`isAdjustedToUTC=true`).
 
-`load` returns the whole table: each query's SQL names the columns it reads,
-and the optimizer prunes the parquet scan to them (the scans' `ReadSchema`
-lists only those columns).
+`load` returns the name of a temp view over the whole table: each query's
+SQL names the columns it reads, and the optimizer prunes the parquet scan to
+them (the scans' `ReadSchema` lists only those columns).  A session registers
+each table file once, on its first `load`, and every later `load` of that
+file returns the same name, so building a query costs no view creation,
+analysis or drop per table.  The registry is keyed by the session object, so
+a new or restarted session registers its own views, and a lock serializes
+first loads when one session builds several queries at once (two files of
+one table loaded together would otherwise race for one view name).
+
+A view fixes the table's file listing when it is registered, so a table file
+must not be rewritten in place while a session that loaded it is live; write
+changed tables to a fresh directory instead.  The test data is read-only, and
+every test fixture that writes tables writes a fresh directory.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import threading
+import weakref
+
+from pyspark.sql import SparkSession
 
 SCHEMAS: dict[str, str] = {
     "region": "r_regionkey int, r_name string",
@@ -46,5 +60,18 @@ def path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.schema(SCHEMAS[name]).parquet(path(sf_dir, name))
+_VIEWS: weakref.WeakKeyDictionary[SparkSession, dict[str, str]] = weakref.WeakKeyDictionary()
+_VIEWS_LOCK = threading.Lock()
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The temp view of table `name` under `sf_dir` in `spark`, registered
+    through the declared schema on the session's first call for the file."""
+    file = path(sf_dir, name)
+    with _VIEWS_LOCK:
+        views = _VIEWS.setdefault(spark, {})
+        if file not in views:
+            view = f"_{name}_{len(views)}"
+            spark.read.schema(SCHEMAS[name]).parquet(file).createOrReplaceTempView(view)
+            views[file] = view
+        return views[file]

@@ -5,10 +5,8 @@ Writes <out_dir>/<query>.txt (all declared queries when none are named).
 
 The dumps are normalized so that two checkouts' plans diff directly
 (`diff -r dir_a dir_b` is empty when the plans are the same): expression ids
-(`#123`), exchange ids (`plan_id=N`), the uuid names of the views that
-`spark.sql(text, name=df)` registers (`_pyspark_<hex>`) and the counters
-PySpark appends to lambda variable names (`x_12`) are replaced by fixed
-tokens.
+(`#123`), exchange ids (`plan_id=N`) and the counters PySpark appends to
+lambda variable names (`x_12`) are replaced by fixed tokens.
 """
 
 from __future__ import annotations
@@ -28,7 +26,6 @@ from engine.session import build_session  # noqa: E402
 NORMALIZE = (
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
-    (re.compile(r"_pyspark_[0-9a-f]+"), "_pyspark_V"),
     (re.compile(r"\b(lambda [a-z]+)_\d+\b"), r"\1"),
 )
 
