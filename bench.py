@@ -2,9 +2,9 @@
 
 Reads the data directory from $SPARK_GRAFT_SF_DIR and the core count from
 $SPARK_GRAFT_CPUS (master local[$SPARK_GRAFT_CPUS]).  Times every declared
-query with the noop sink (guide section 1.4: computes every column of every
-row, no output cost) after one untimed JVM/codegen warmup query, and prints
-ONE JSON line:
+query with the noop sink (it computes every column of every row and writes
+nothing, so output cost is not timed) after one untimed JVM/codegen warmup
+query, and prints ONE JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 

@@ -2,11 +2,11 @@ r"""Declared queries: Spark SQL texts and their DuckDB oracle SQL.
 
 Each query is one Spark SQL statement whose `{table}` placeholders name the
 tables it reads.  `Query.fn` looks each named table up once (through the
-module-level `load`, which returns the table's temp view, registered once per
-session) and substitutes the view names into the text, so the whole query is
-one `spark.sql` call, parsed and analyzed once, with no view created or
-dropped per build.  The view registry is per session and locked, so queries
-built concurrently in one session share the views safely.
+module-level `load`, which returns the table's temp view, registered in the
+session's catalog on first use) and substitutes the view names into the
+text, so the whole query is one `spark.sql` call, parsed and analyzed once,
+with no view created or dropped per build.  A view's name depends only on its
+table file, so queries built concurrently in one session share the views.
 
 Writing the texts:
 

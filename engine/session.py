@@ -1,11 +1,11 @@
 """SparkSession construction for bench/tests.
 
-Scale-adaptive with local defaults (guide section 9 and section 2.2): shuffle
-partitions derive from core count and input size rather than a constant tuned
-for one deployment; AQE coalesces the rest at runtime.  Every setting here is
-needed by a test or a measurement named next to it; anything else (a RocksDB
-state store, say) is selected with Spark's own `--conf` or
-spark-defaults.conf.
+Scale-adaptive with local defaults: shuffle partitions derive from core count
+and input size rather than a constant tuned for one deployment, so one build
+fits a 4-core and a 32-core host at any scale factor; AQE coalesces the rest
+at runtime.  Every setting here is needed by a test or a measurement named
+next to it; anything else (a RocksDB state store, say) is selected with
+Spark's own `--conf` or spark-defaults.conf.
 """
 
 from __future__ import annotations
@@ -21,9 +21,9 @@ def input_bytes(sf_dir: str) -> int:
 def shuffle_partitions(cpus: int, sf_dir: str) -> int:
     """Derive shuffle parallelism from cores and input scale.
 
-    Local rule: at least the core count (keep every core busy), scaled up so
-    post-shuffle partitions stay in the 100MB-1GB band on big inputs
-    (guide section 2.2).  AQE coalescing trims the excess at runtime.
+    One partition per 256 MiB of parquet input, but at least the core count
+    (keep every core busy, and never below 2) and at most 4x it.  AQE
+    coalescing trims the excess at runtime.
     """
     n = max(2, cpus)
     target = 256 * 1024 * 1024  # advisory post-shuffle partition size
@@ -46,10 +46,11 @@ def build_session(cpus: int, sf_dir: str, app_name: str = "engine"):
         # Pinned by tests/test_session.py::test_shuffle_partitions_follow_cores_and_input.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions(cpus, sf_dir)))
         # Let AQE rewrite a planned sort-merge join to a shuffled hash join
-        # when every post-shuffle partition's build side fits locally (guide
-        # 3.1: removes both sorts).  Default 0 = off; the value is Spark's
-        # default advisory post-shuffle partition size (AQE coalesces
-        # partitions toward it, so a qualifying build side is ~one partition).
+        # when every post-shuffle partition's build side fits locally: a hash
+        # join sorts neither side, where a sort-merge join sorts both.
+        # Default 0 = off; the value is Spark's default advisory post-shuffle
+        # partition size (AQE coalesces partitions toward it, so a qualifying
+        # build side is ~one partition).
         # Inert at local SFs where these joins are broadcast anyway; pinned by
         # tests/test_queries.py::test_oracle_parity_shuffled.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")

@@ -13,13 +13,15 @@ annotated as an instant (`isAdjustedToUTC=true`).
 
 `load` returns the name of a temp view over the whole table: each query's
 SQL names the columns it reads, and the optimizer prunes the parquet scan to
-them (the scans' `ReadSchema` lists only those columns).  A session registers
-each table file once, on its first `load`, and every later `load` of that
-file returns the same name, so building a query costs no view creation,
-analysis or drop per table.  The registry is keyed by the session object, so
-a new or restarted session registers its own views, and a lock serializes
-first loads when one session builds several queries at once (two files of
-one table loaded together would otherwise race for one view name).
+them (the scans' `ReadSchema` lists only those columns).  Spark's per-session
+temp-view catalog is the only registry.  The view name is a digest of the
+table file's path, so every `load` of one file in one session finds the same
+view, and `load` registers it only when the catalog lacks it: building a query
+costs no view creation, analysis or drop per table once the view exists.
+Every Python wrapper over one Spark session sees the same views, a new session
+registers its own, and a dropped view is registered again on the next `load`.
+Two threads that race on a first load register the same view over the same
+file, and the catalog serializes the two writes, so no lock is needed.
 
 A view fixes the table's file listing when it is registered, so a table file
 must not be rewritten in place while a session that loaded it is live; write
@@ -29,8 +31,7 @@ every test fixture that writes tables writes a fresh directory.
 
 from __future__ import annotations
 
-import threading
-import weakref
+import hashlib
 
 from pyspark.sql import SparkSession
 
@@ -60,18 +61,11 @@ def path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-_VIEWS: weakref.WeakKeyDictionary[SparkSession, dict[str, str]] = weakref.WeakKeyDictionary()
-_VIEWS_LOCK = threading.Lock()
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> str:
     """The temp view of table `name` under `sf_dir` in `spark`, registered
-    through the declared schema on the session's first call for the file."""
+    through the declared schema when the session's catalog lacks it."""
     file = path(sf_dir, name)
-    with _VIEWS_LOCK:
-        views = _VIEWS.setdefault(spark, {})
-        if file not in views:
-            view = f"_{name}_{len(views)}"
-            spark.read.schema(SCHEMAS[name]).parquet(file).createOrReplaceTempView(view)
-            views[file] = view
-        return views[file]
+    view = f"_{name}_{hashlib.md5(file.encode()).hexdigest()[:16]}"
+    if not spark.catalog.tableExists(view):
+        spark.read.schema(SCHEMAS[name]).parquet(file).createOrReplaceTempView(view)
+    return view

@@ -29,11 +29,12 @@ def test_warm_pass_compiles_nothing(spark):
 
 def test_query_build_makes_few_py4j_calls(spark, monkeypatch):
     """Each query is one `spark.sql` call over its tables' views, so building
-    (not running) all 17 takes a few hundred py4j round trips in a new
-    session, where each table's view is registered once, and about a hundred
-    when they are built again.  The same queries written as DataFrame-API
-    chains took 10,000-12,000: every Column op is several calls, and every
-    step re-runs the analyzer.  The bounds leave room for Python GC, which
+    (not running) all 17 takes about 190-350 py4j round trips in a new
+    session, where each table's view is registered once, and about 105-230
+    when they are built again, each of the 22 table lookups one catalog
+    check.  The same queries written as DataFrame-API chains took
+    10,000-12,000: every Column op is several calls, and every step re-runs
+    the analyzer.  The bounds leave room for Python GC, which
     sends bursts of about 115 object deletions at unpredictable moments."""
     from py4j.clientserver import ClientServerConnection
 

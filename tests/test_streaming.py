@@ -50,7 +50,7 @@ def test_stream_dedup(spark):
     stream = streaming.read_event_stream(spark, SF_SMOKE)
     table = streaming.run_to_memory(streaming.stream_dedup(stream))
     n = spark.table(table).count()
-    n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    n_batch = spark.read.parquet(path(SF_SMOKE, "events")).count()
     assert n == n_batch  # event_ids are unique -> dedup is a no-op pass-through
 
 

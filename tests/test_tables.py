@@ -1,6 +1,6 @@
 """The declared table schemas: equal to what the files hold, free of Spark
-jobs to read, and timezone-free for timestamps; and the per-session views
-that `load` registers once per table file."""
+jobs to read, and timezone-free for timestamps; and the temp views that `load`
+registers in the session's catalog, one per table file."""
 
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
@@ -8,6 +8,7 @@ from datetime import datetime
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 
 from engine.queries import QUERIES
 from engine.tables import TABLES, load, path
@@ -92,3 +93,24 @@ def test_session_registers_each_table_once(spark):
     assert len(views) == len(dirs) * len(named)
     assert {load(session, d, t) for d in dirs for t in named} == views
     assert _temp_views(spark) == parent_views
+
+
+def test_views_live_in_the_session_catalog(spark):
+    """The session's catalog is the only view registry: a second Python
+    wrapper over the same session that builds over another directory leaves
+    the first wrapper's queries reading their own files, and views dropped
+    from the catalog are registered again by the next build."""
+    session = spark.newSession()
+    small, other_dir = SF_DIRS[:2]
+    for q in QUERIES.values():
+        q.fn(session, small)
+    wrapper = SparkSession(session.sparkContext, session._jsparkSession)
+    for q in QUERIES.values():
+        q.fn(wrapper, other_dir)
+    for q in QUERIES.values():
+        assert all(f"{small}/" in f for f in q.fn(session, small).inputFiles()), q
+    for view in _temp_views(session):
+        session.catalog.dropTempView(view)
+    assert not _temp_views(session)
+    for q in QUERIES.values():
+        assert q.fn(session, small).schema.fields

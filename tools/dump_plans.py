@@ -7,6 +7,12 @@ The dumps are normalized so that two checkouts' plans diff directly
 (`diff -r dir_a dir_b` is empty when the plans are the same): expression ids
 (`#123`), exchange ids (`plan_id=N`) and the counters PySpark appends to
 lambda variable names (`x_12`) are replaced by fixed tokens.
+
+One change is invisible here: `Divide`'s evaluation mode.  The TRY-mode
+`Divide` that a double `try_divide` becomes and an ANSI `/`, which aborts
+with DIVIDE_BY_ZERO, both print as `/`, so an empty `diff -r` cannot tell
+them apart.  Only the adversarial rows of
+tests/test_queries.py::test_oracle_parity_adversarial do.
 """
 
 from __future__ import annotations
