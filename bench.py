@@ -62,9 +62,9 @@ def main() -> None:
     times: dict[str, float] = {}
     for name, q in QUERIES.items():
         sc.setJobDescription(name)
-        t0 = time.time()
+        t0 = time.perf_counter()
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.time() - t0, 3)
+        times[name] = round(time.perf_counter() - t0, 3)
     sc.setJobDescription(None)
 
     total = round(sum(times.values()), 3)

@@ -18,17 +18,15 @@ Writing the texts:
 * A Spark text departs from its oracle's direct form only for an answer
   (an adversarial row of tests/test_queries.py that the direct form gets
   wrong) or for a plan change that measures as faster, and its comment
-  names which.  "Measures as faster" is the warm per-query probe: in one
-  `build_session(4, sf_dir)`, `Query.fn` builds each form and writes it to
-  the noop sink, 3 warm-up rounds and then 15 rounds alternating which form
-  runs first.  The departure stays when it beats the direct form in at
-  least 12 of the 15 rounds at sf0.001 or at sf0.1 (a coin flip does that
-  less than 2% of the time), and its comment quotes the wall-clock medians,
-  departure against direct form, with its rounds won.  Spark's size-based
-  planner and AQE pick every join; the texts carry no join hints.  The
-  plan gate, `tools/dump_plans.py <out_dir> <sf_dir>` in two checkouts and
-  `diff -r`, is empty at sf0.001 and sf0.1 for a construct that changes no
-  plan.
+  names which.  "Measures as faster" is the warm per-query probe,
+  `python tools/probe_texts.py <sf_dir> <checkout with the other form>`:
+  the departure stays when it wins at least 12 of the 15 rounds at sf0.001
+  or at sf0.1 (a coin flip does that less than 2% of the time), and its
+  comment quotes both medians, departure first, and its rounds won.
+  Spark's size-based planner and AQE pick every join; the texts carry no
+  join hints.  The plan gate, `tools/dump_plans.py <out_dir> <sf_dir>` in
+  two checkouts and `diff -r`, is empty at sf0.001 and sf0.1 for a
+  construct that changes no plan.
 
 Numerical discipline (so the DuckDB oracle value-hash matches bit-for-bit):
 
@@ -307,18 +305,12 @@ FROM g
 GAP_STATS = _EVENTS_C + """, g AS (
   SELECT *, t_us - lag(t_us) OVER (PARTITION BY user_id ORDER BY t_us ASC, event_id ASC) AS gap_us
   FROM ev
-), agg AS (
-  SELECT user_id,
-         count(1) AS n_gaps,
-         sum(gap_us) AS sum_gap_us,
-         max(gap_us) AS max_gap_us,
-         sum(CASE WHEN gap_us > 3600000000 THEN 1 ELSE 0 END) AS n_void
-  FROM g WHERE gap_us IS NOT NULL
-  GROUP BY user_id
 )
-SELECT user_id, n_gaps, max_gap_us, n_void,
-       CAST(sum_gap_us AS DOUBLE) / CAST(n_gaps AS DOUBLE) / 1000000.0D AS avg_gap_s
-FROM agg
+SELECT user_id, count(1) AS n_gaps, max(gap_us) AS max_gap_us,
+       sum(CASE WHEN gap_us > 3600000000 THEN 1 ELSE 0 END) AS n_void,
+       CAST(sum(gap_us) AS DOUBLE) / CAST(count(1) AS DOUBLE) / 1000000.0D AS avg_gap_s
+FROM g WHERE gap_us IS NOT NULL
+GROUP BY user_id
 """
 
 GAP_STATS_ORACLE = """
@@ -446,9 +438,8 @@ FROM g
 # vs 545 ms (15/15).  A NULL user_id is one group here and in the oracle
 # (its totals join IS NOT DISTINCT FROM).
 DOMINANT_BEHAVIOR = _EVENTS_C + """, g AS (
-  SELECT user_id, day_d, event_type, sum(value_c) AS sum_c, count(1) AS n
-  FROM (SELECT to_date(ts) AS day_d, user_id, event_type, value_c FROM ev)
-  GROUP BY user_id, day_d, event_type
+  SELECT user_id, to_date(ts) AS day_d, event_type, sum(value_c) AS sum_c, count(1) AS n
+  FROM ev GROUP BY user_id, day_d, event_type
 ), ranked AS (
   SELECT *,
          row_number() OVER (PARTITION BY user_id, day_d ORDER BY sum_c DESC, event_type ASC) AS rn,
@@ -525,28 +516,24 @@ FROM r
 """
 
 
-# Exact per-event-type sufficient statistics -> (mu, sigma) doubles, appended
-# to `_EVENTS_C` as the CTE `stats`.  value_c^2 is ~2.5e9 per row, so a BIGINT
-# sum wraps past ~3.7e9 rows per event type: sum the squares as decimal(38,0)
-# (DuckDB's HUGEINT sum); as a plain sum it aborts with ARITHMETIC_OVERFLOW on
-# the adversarial `huge` events.  sum_c itself stays BIGINT: |value_c| <= ~5e4
-# keeps it exact to ~2e14 rows/type.  The variance numerator
-# n*sumsq_c - sum_c^2 is computed in decimal(38,0) too (HUGEINT in the
-# oracle), so it is exact and never negative; sigma = sqrt(double of it) / n.
-# The double form sumsq/n - (sum/n)^2 can cancel below zero on near-constant
-# large values (10,000,000.07, .07, .08 give -128), whose sqrt is NaN.  A
-# constant type gets sigma 0, hence the nullif below.
-_TYPE_STATS = """, type_sums AS (
-  SELECT event_type, count(1) AS n, sum(value_c) AS sum_c,
-         sum(CAST(value_c * value_c AS DECIMAL(38,0))) AS sumsq_c
+# Exact per-event-type sufficient statistics -> (mu, sigma) doubles, one
+# aggregate appended to `_EVENTS_C` as the CTE `stats`.  value_c^2 is ~2.5e9
+# per row, so a BIGINT sum of squares wraps past ~3.7e9 rows per event type:
+# it sums as decimal(38,0) (DuckDB's HUGEINT sum); as a plain sum it aborts
+# with ARITHMETIC_OVERFLOW on the adversarial `huge` events.  sum(value_c)
+# stays BIGINT, exact to ~2e14 rows/type.  The variance numerator
+# count * sum(value_c^2) - sum(value_c)^2 is decimal(38,0) too (HUGEINT in the
+# oracle), exact and never negative.  The double form can cancel below zero
+# on near-constant large values (10,000,000.07, .07, .08 give -128), whose
+# sqrt is NaN.  A constant type gets sigma 0, hence the nullif below.
+_TYPE_STATS = """, stats AS (
+  SELECT event_type, count(1) AS n_type,
+         CAST(sum(value_c) AS DOUBLE) / CAST(count(1) AS DOUBLE) / 100.0D AS mu,
+         sqrt(CAST(count(1) * sum(CAST(value_c * value_c AS DECIMAL(38,0)))
+                   - CAST(sum(value_c) AS DECIMAL(38,0)) * sum(value_c) AS DOUBLE))
+           / CAST(count(1) AS DOUBLE) / 100.0D AS sigma,
+         sum(value_c) AS sum_c
   FROM ev GROUP BY event_type
-), stats AS (
-  SELECT event_type, n AS n_type,
-         CAST(sum_c AS DOUBLE) / CAST(n AS DOUBLE) / 100.0D AS mu,
-         sqrt(CAST(n * sumsq_c - CAST(sum_c AS DECIMAL(38,0)) * sum_c AS DOUBLE))
-           / CAST(n AS DOUBLE) / 100.0D AS sigma,
-         sum_c
-  FROM type_sums
 )"""
 
 _TYPE_STATS_ORACLE = """
@@ -584,14 +571,13 @@ ANOMALY_USERS = _EVENTS_C + _TYPE_STATS + """, z AS (
   SELECT user_id,
          abs((CAST(value_c AS DOUBLE) / 100.0D - mu) / nullif(sigma, 0.0D)) AS abs_z
   FROM ev JOIN stats USING (event_type)
-), agg AS (
-  SELECT user_id, count(1) AS n,
-         sum(CASE WHEN abs_z > 2.5D THEN 1 ELSE 0 END) AS n_anom,
-         max(abs_z) AS max_abs_z
-  FROM z GROUP BY user_id
 )
-SELECT user_id, n, n_anom, CAST(n_anom AS DOUBLE) / CAST(n AS DOUBLE) AS anom_rate, max_abs_z
-FROM agg
+SELECT user_id, count(1) AS n,
+       sum(CASE WHEN abs_z > 2.5D THEN 1 ELSE 0 END) AS n_anom,
+       CAST(sum(CASE WHEN abs_z > 2.5D THEN 1 ELSE 0 END) AS DOUBLE)
+         / CAST(count(1) AS DOUBLE) AS anom_rate,
+       max(abs_z) AS max_abs_z
+FROM z GROUP BY user_id
 """
 
 ANOMALY_USERS_ORACLE = f"""
@@ -623,12 +609,10 @@ RELIABILITY_BINS = _EVENTS_C + """, mx AS (
          least(floor(CAST(value_c AS DOUBLE) * 10.0D / CAST(nullif(max_c, 0) AS DOUBLE)), 9) AS bin,
          value_c
   FROM ev JOIN mx USING (event_type)
-), g AS (
-  SELECT event_type, bin, count(1) AS n, sum(value_c) AS sum_c
-  FROM binned GROUP BY event_type, bin
 )
-SELECT event_type, bin, n, CAST(sum_c AS DOUBLE) / CAST(n AS DOUBLE) / 100.0D AS avg_value
-FROM g
+SELECT event_type, bin, count(1) AS n,
+       CAST(sum(value_c) AS DOUBLE) / CAST(count(1) AS DOUBLE) / 100.0D AS avg_value
+FROM binned GROUP BY event_type, bin
 """
 
 RELIABILITY_BINS_ORACLE = """
@@ -654,18 +638,13 @@ FROM binned GROUP BY 1, 2
 # their per-type sum grows ~n^2 and wraps int64 past ~sf200: accumulate as
 # decimal(38,0), as DuckDB's HUGEINT sum of BIGINT absdev does; as a plain
 # sum it aborts with ARITHMETIC_OVERFLOW on the adversarial `wide` events.
-MAE_EVAL = _EVENTS_C + _TYPE_STATS + """, g AS (
-  SELECT event_type,
-         max(n_type) AS n,
-         max(sum_c) AS sum_c,
-         sum(CAST(abs(value_c * n_type - sum_c) AS DECIMAL(38,0))) AS sum_absdev
-  FROM ev JOIN stats USING (event_type)
-  GROUP BY event_type
-)
-SELECT event_type, n,
-       CAST(sum_c AS DOUBLE) / CAST(n AS DOUBLE) / 100.0D AS mean_value,
-       CAST(sum_absdev AS DOUBLE) / CAST(n AS DOUBLE) / CAST(n AS DOUBLE) / 100.0D AS mae
-FROM g
+MAE_EVAL = _EVENTS_C + _TYPE_STATS + """
+SELECT event_type, max(n_type) AS n,
+       CAST(max(sum_c) AS DOUBLE) / CAST(max(n_type) AS DOUBLE) / 100.0D AS mean_value,
+       CAST(sum(CAST(abs(value_c * n_type - sum_c) AS DECIMAL(38,0))) AS DOUBLE)
+         / CAST(max(n_type) AS DOUBLE) / CAST(max(n_type) AS DOUBLE) / 100.0D AS mae
+FROM ev JOIN stats USING (event_type)
+GROUP BY event_type
 """
 
 MAE_EVAL_ORACLE = """
@@ -743,18 +722,13 @@ FROM d GROUP BY fingerprint
 # Text-pipeline stats: per (lang, source) token and char counts.
 DOC_TOKEN_STATS = """
 WITH d AS (
-  SELECT lang, source,
-         CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens,
-         n_chars
+  SELECT lang, source, CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens, n_chars
   FROM {documents}
-), g AS (
-  SELECT lang, source, count(1) AS n_docs, sum(n_tokens) AS total_tokens,
-         sum(n_chars) AS total_chars, max(n_tokens) AS max_tokens
-  FROM d GROUP BY lang, source
 )
-SELECT lang, source, n_docs, total_tokens, total_chars, max_tokens,
-       CAST(total_chars AS DOUBLE) / CAST(n_docs AS DOUBLE) AS avg_chars
-FROM g
+SELECT lang, source, count(1) AS n_docs, sum(n_tokens) AS total_tokens,
+       sum(n_chars) AS total_chars, max(n_tokens) AS max_tokens,
+       CAST(sum(n_chars) AS DOUBLE) / CAST(count(1) AS DOUBLE) AS avg_chars
+FROM d GROUP BY lang, source
 """
 
 DOC_TOKEN_STATS_ORACLE = """
@@ -828,13 +802,10 @@ WHERE rank <= 5
 # Multimodal alignment: join documents to embeddings on id; per (lang, label)
 # coverage stats.
 MULTIMODAL_ALIGN = """
-WITH g AS (
-  SELECT lang, label, count(1) AS n, sum(n_chars) AS total_chars, min(doc_id) AS min_doc_id
-  FROM {documents} JOIN {embeddings} ON doc_id = vec_id
-  GROUP BY lang, label
-)
-SELECT lang, label, n, min_doc_id, CAST(total_chars AS DOUBLE) / CAST(n AS DOUBLE) AS avg_chars
-FROM g
+SELECT lang, label, count(1) AS n, min(doc_id) AS min_doc_id,
+       CAST(sum(n_chars) AS DOUBLE) / CAST(count(1) AS DOUBLE) AS avg_chars
+FROM {documents} JOIN {embeddings} ON doc_id = vec_id
+GROUP BY lang, label
 """
 
 MULTIMODAL_ALIGN_ORACLE = """
