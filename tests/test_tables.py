@@ -75,14 +75,13 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
-def test_views_live_in_the_session_catalog(spark):
-    """Queries built from four threads over two directories share one view
-    per table file and read their own files, also after a second Python
-    wrapper over the session builds; other sessions' views are left alone,
-    and dropped views are registered again by the next build."""
+def test_session_registers_each_table_once(spark):
+    """Queries built from four threads at once in one session, over two data
+    directories, share one view per table file they name, and each reads its
+    own directory; another session's views are left alone."""
     parent_views = _temp_views(spark)
     session = spark.newSession()
-    small, other_dir = dirs = SF_DIRS[:2]
+    dirs = SF_DIRS[:2]
     builds = [(q, d) for q in QUERIES.values() for d in dirs]
     with ThreadPoolExecutor(4) as pool:
         dfs = list(pool.map(lambda b: b[0].fn(session, b[1]), builds, timeout=300))
@@ -95,6 +94,16 @@ def test_views_live_in_the_session_catalog(spark):
     assert {load(session, d, t) for d in dirs for t in named} == views
     assert _temp_views(spark) == parent_views
 
+
+def test_views_live_in_the_session_catalog(spark):
+    """The session's catalog is the only view registry: a second Python
+    wrapper over the same session that builds over another directory leaves
+    the first wrapper's queries reading their own files, and views dropped
+    from the catalog are registered again by the next build."""
+    session = spark.newSession()
+    small, other_dir = SF_DIRS[:2]
+    for q in QUERIES.values():
+        q.fn(session, small)
     wrapper = SparkSession(session.sparkContext, session._jsparkSession)
     for q in QUERIES.values():
         q.fn(wrapper, other_dir)
