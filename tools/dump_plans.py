@@ -47,8 +47,7 @@ def main() -> None:
         raise SystemExit(__doc__)
     out_dir, sf_dir, *names = sys.argv[1:]
     os.makedirs(out_dir, exist_ok=True)
-    spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                          sf_dir=sf_dir, app_name="plans")
+    spark = build_session(4, sf_dir=sf_dir, app_name="plans")
     for name in names or QUERIES:
         df = QUERIES[name].fn(spark, sf_dir)
         buf = io.StringIO()
